@@ -245,15 +245,15 @@ class Engine:
     def semantic_dedup(
         self, emb: DataFrame, tau: float = 0.99, k_centroids: int = 16, probe: int = 2
     ) -> DataFrame:
-        """SemDeDup semantic near-dup pairs over (vec_id, emb) via the
-        block-matmul production path (operators/similarity
-        .semantic_dedup_pairs_blocked — embeddings never ride a pair
-        join; pinned pair-set-equal to the fold twin in pytest); feed
-        the pairs to operators/graph.connected_components +
-        canonical-keep for the drop decision."""
-        from tcdb_spark.operators.similarity import semantic_dedup_pairs_blocked
+        """SemDeDup semantic near-dup pairs over (vec_id, emb)
+        (operators/similarity.semantic_dedup_pairs — each cell scored
+        as one block, embeddings never ride a pair join; the same code
+        the hash-oracled ``semantic_dedup`` lane runs); feed the pairs
+        to operators/graph.connected_components + canonical-keep for
+        the drop decision."""
+        from tcdb_spark.operators.similarity import semantic_dedup_pairs
 
-        return semantic_dedup_pairs_blocked(
+        return semantic_dedup_pairs(
             emb, tau=tau, k_centroids=k_centroids, probe=probe
         )
 
@@ -392,8 +392,8 @@ class Engine:
     ) -> DataFrame:
         """Hard-negative mining: k nearest OTHER-label vectors per
         anchor via the IVF-bounded k-NN join (operators/similarity.py
-        knn_join, block-matmul scoring path) — contrastive negatives by
-        difficulty, not chance."""
+        knn_join, block-scored inside shared cells) — contrastive
+        negatives by difficulty, not chance."""
         from pyspark.sql import functions as F
 
         from tcdb_spark.operators.similarity import knn_join
@@ -919,8 +919,9 @@ class Engine:
         shortlist: int = 64,
     ) -> DataFrame:
         """ADC top-k over a PQ-encoded corpus: per-candidate scoring is
-        m table lookups (pure column expressions), the shortlist bounds
-        the exact re-rank. Point-lookup path (bounded query side)."""
+        m table lookups (one Arrow gather per batch), the shortlist
+        bounds the exact re-rank. Point-lookup path (bounded query
+        side)."""
         from tcdb_spark.operators.similarity import pq_search
 
         return pq_search(encoded, codebooks, queries, k=k, shortlist=shortlist)

@@ -1,16 +1,24 @@
 """Similarity-search operators: IVF (inverted-file) approximate
 nearest-neighbor — the trained-quantizer counterpart of the LSH-bucketed
-path (plans/queries_sim.lsh_bucket_ann), per SURVEY.md §2.12 sim-topk.
+path (plans/queries_sim.lsh_bucket_ann), per SURVEY.md §2.12 sim-topk —
+plus product quantization (PQ), the IVF-PQ composition and SemDeDup.
 
 Index = spherical k-means coarse quantizer (driver-trained on a bounded
 deterministic sample, fixed seed) assigning every vector to a centroid
 bucket via one Arrow matmul per batch; search probes the ``nprobe``
-nearest buckets per query and runs exact cosine top-k inside — as
-block matmuls (``ivf_search_blocked``, the production path) or as
-column-expression folds (``ivf_search``, the pinned-float-order path
-the exact-attestation oracles hash). At 100 TB the index table is
-partitioned by bucket so a probe touches only nprobe/k_centroids of
-the data; recall tunes with nprobe.
+nearest buckets per query and runs exact cosine top-k inside.  At
+100 TB the index table is partitioned by bucket so a probe touches only
+nprobe/k_centroids of the data; recall tunes with nprobe.
+
+One search function per index family — ``ivf_search``, ``pq_search``,
+``ivfpq_search``, ``semantic_dedup_pairs`` — each in block shape
+(embeddings never ride a pair join) and each scoring with the same
+numpy kernel (``_fold_dot``/``_cos``): dots accumulate one dimension at
+a time, so every cosine is the double the Spark ``aggregate(zip_with)``
+fold gives, and the exact modes hash-match the DuckDB oracles.  Every
+probe is ``_nearest_cells``, the metric ``_assign_bucket`` buckets
+with.  A pair with a zero-norm side scores NULL and ranks after every
+number (the oracles' ``x / 0`` semantics).
 """
 
 from __future__ import annotations
@@ -27,8 +35,6 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
-
-
 def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
 
@@ -37,9 +43,88 @@ def _cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _l2_normalize(arr):
-    n = F.sqrt(F.aggregate(F.transform(arr, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-    return F.transform(arr, lambda x: x / n)
+def _fold_dot(A, B):
+    """Dot products accumulated one dimension at a time — per pair
+    ``((0.0 + a_0 b_0) + a_1 b_1) + ...``, the float sequence of the
+    ``_dot`` left fold, vectorized over pairs.  ``A`` and ``B`` broadcast
+    over their leading axes: ``Q[:, None]`` with ``B[None]`` scores a
+    whole block, two row-aligned arrays score gathered pairs, and
+    ``np.sqrt(_fold_dot(X, X))`` is ``_norm``'s sequential norm."""
+    out = np.zeros(np.broadcast_shapes(A.shape[:-1], B.shape[:-1]))
+    for i in range(A.shape[-1]):
+        out += A[..., i] * B[..., i]
+    return out
+
+
+def _cos(D, qn, cn):
+    """``D / (qn * cn)`` with NaN where either norm is zero; NaN leaves
+    the Arrow UDF boundary as NULL, like SQL ``x / 0``.  Query norms
+    are ``sqrt(_fold_dot(Q, Q))``, candidate norms the index's stored
+    ``nrm`` column."""
+    zero = (qn == 0) | (cn == 0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(zero, np.nan, D / (qn * cn))
+
+
+def _rank_key(cos, drop):
+    """Ascending sort key of the shared search order: cosine
+    descending, NULL (NaN) after every number; ``drop`` pairs get NaN
+    and never qualify."""
+    return np.where(drop, np.nan, np.where(np.isnan(cos), np.inf, -cos))
+
+
+def _top_k_mask(key, kk):
+    """Mask of each row's ``kk`` smallest keys, ties to the lower
+    column, NaN never.  With columns in ascending candidate-id order
+    that is the (key, vec_id) order of the final window, so a block
+    never drops a tie the window would keep (argpartition alone breaks
+    ties arbitrarily — an all-NULL row is one big tie)."""
+    ok = ~np.isnan(key)
+    if kk >= key.shape[1]:
+        return ok
+    t = np.partition(key, kk - 1, axis=1)[:, kk - 1 : kk]  # NaN sorts last
+    below = (key < t) | np.isnan(t)
+    tie = key == t
+    room = kk - below.sum(1, keepdims=True)
+    return ok & (below | (tie & (np.cumsum(tie, axis=1) <= room)))
+
+
+def _nearest_cells(X, centroids, nprobe: int):
+    """Each row's ``nprobe`` nearest coarse cells — the one probe every
+    IVF family and ``_assign_bucket`` share: rows L2-normalized (zero
+    rows stay zero), raw centroids, distance ``||c||^2 - 2 xn.c`` (the
+    constant ``||xn||^2`` dropped), ties to the lower cell id."""
+    C = np.asarray(centroids, dtype="float64")
+    nrm = np.linalg.norm(X, axis=1)
+    Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
+    d = (C * C).sum(1)[None, :] - 2.0 * (Xn @ C.T)
+    return np.argsort(d, axis=1, kind="stable")[:, :nprobe]
+
+
+def _probe_cells(col, centroids, nprobe: int):
+    """Column form of :func:`_nearest_cells`: an ``array<int>`` of each
+    row's probed cells, one Arrow matmul per batch."""
+    from pyspark.sql.functions import pandas_udf
+
+    npr = min(nprobe, len(centroids))
+
+    @pandas_udf("array<int>")
+    def probes(e: pd.Series) -> pd.Series:
+        cells = _nearest_cells(np.stack(e.to_numpy()), centroids, npr)
+        return pd.Series(list(cells.astype("int32")))
+
+    return probes(col)
+
+
+def _window_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Global per-query top-k over block survivors (q_id, vec_id, cos):
+    DESC puts NULL last, ties to the smaller vec_id."""
+    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank_in_group", F.row_number().over(w).cast("int"))
+        .where(F.col("rank_in_group") <= k)
+        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
+    )
 
 
 def _lloyd_kmeans(X, k: int, seed: int, iters: int = 25, n_init: int | None = None):
@@ -156,130 +241,32 @@ def ivf_search(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 3,
-    candidate_filter=None,
+    mismatch_cols: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Probe the nprobe nearest centroid buckets per query, exact cosine
-    top-k inside. ``queries``: (q_id, q_emb array<double>).
-    ``candidate_filter``: optional Column over the joined (query x
-    candidate) frame applied BEFORE top-k — e.g. a label-mismatch
-    predicate turns the search into hard-negative mining (k nearest
-    among a constrained candidate class)."""
-    cents = F.array(*[F.array(*[F.lit(v) for v in c]) for c in centroids])
-    # per query: distances to every centroid -> nprobe smallest bucket ids.
-    # queries are normalized to match the spherical quantizer (ivf_build)
-    with_d = queries.withColumn("q_nrm", _norm(F.col("q_emb"))).withColumn(
-        "__qn", _l2_normalize(F.col("q_emb"))
-    ).withColumn(
-        "__dists",
-        F.transform(
-            cents,
-            lambda c: F.aggregate(
-                F.zip_with(c, F.col("__qn"), lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda s, x: s + x,
-            ),
-        ),
-    )
-    n_cent = len(centroids)
-    probe = with_d.withColumn(
-        "bucket",
-        F.explode(
-            F.slice(
-                F.array_sort(
-                    F.transform(
-                        F.sequence(F.lit(0), F.lit(n_cent - 1)),
-                        lambda i: F.struct(
-                            F.element_at(F.col("__dists"), i + 1).alias("d"),
-                            i.alias("bucket"),
-                        ),
-                    )
-                ),
-                1,
-                nprobe,
-            )
-        ),
-    ).select(
-        *queries.columns, "q_nrm", F.col("bucket.bucket").alias("bucket")
-    )  # carry ALL query-side columns (e.g. q_label for candidate_filter)
+    top-k inside.  ``queries``: (q_id, q_emb array<double>).
 
-    cand = indexed.join(probe, on="bucket").where(F.col("vec_id") != F.col("q_id"))
-    if candidate_filter is not None:
-        cand = cand.where(candidate_filter)
-    scored = cand.select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias("cos"),
-    )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank_in_group", F.row_number().over(w).cast("int"))
-        .where(F.col("rank_in_group") <= k)
-        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
-    )
+    Scoring runs per (probing queries x bucket candidates) block inside
+    a cogrouped applyInPandas, and only the k survivors per (query,
+    bucket) leave Python — the embeddings never ride the pair join, so
+    the shuffled volume is |queries| x nprobe x k scalar rows, not
+    |pairs| x dim doubles.  Each candidate lives in exactly one bucket,
+    so cross-probe results are disjoint and the global per-query top-k
+    window runs over at most nprobe*k rows per query.
 
-
-def ivf_search_blocked(
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 3,
-    mismatch_cols: tuple[str, str] | None = None,
-    fold_order: bool = False,
-) -> DataFrame:
-    """Block-matrix IVF search: scoring runs as ONE numpy matmul per
-    (probing queries x bucket candidates) block inside a cogrouped
-    applyInPandas, and only the k survivors per (query, bucket) leave
-    Python — the embeddings never ride the pair join.  Versus the
-    row-expression path (``ivf_search``), the shuffled volume drops
-    from |pairs| x dim doubles to |queries| x nprobe x k scalar rows,
-    and the dot products move from interpreted per-element HOF folds to
-    BLAS.  Each candidate lives in exactly one bucket, so cross-probe
-    results are disjoint and the global per-query top-k window runs
-    over at most nprobe*k rows per query.
-
-    ``mismatch_cols=(q_col, cand_col)`` masks pairs whose two columns
-    are EQUAL before top-k (label-mismatch hard-negative mining).
-    Self-pairs (vec_id == q_id) are always masked.  Ranks and
-    tie-breaks ((-cos, vec_id)) match ``ivf_search``.
-
-    ``fold_order=True`` (round 9) reproduces ``ivf_search``'s float
-    semantics BIT-FOR-BIT while keeping the block shape: the pair-dot
-    matrix accumulates one dimension at a time
-    (``D += outer(Q[:, i], B[:, i])`` — per pair that is
-    ``((0.0 + p_0) + p_1) + ...``, exactly the ``aggregate(zip_with)``
-    left fold), the query norm is the same sequential
-    ``sqrt(0.0 + x_0^2 + ...)``, the candidate norm is the index's
-    ``nrm`` column unchanged, and the division is ``D / (qn * cn)``
-    with no zero-guards — so every cosine equals the fold path's
-    double.  Mismatch masking additionally drops NULL-label pairs on
-    EITHER side, matching the SQL ``label <> q_label`` filter's
-    three-valued semantics the row path applied.  This replaces the
-    interpreted HOF fold the exact-attestation lanes paid per pair
-    (~3.8 us/pair interpreted lambda frames — 15 s of the 23 s
-    hard_negative_mining wall at sf0.1) with vectorized numpy at the
-    same float values; BLAS (`Q @ B.T`) stays the default for the
-    recall-gated production configs.
+    Cosines are ``_fold_dot(q, c) / (||q|| * nrm)`` with the sequential
+    query norm and the index's stored ``nrm``: the doubles of the
+    ``aggregate(zip_with)`` fold, so nprobe = k_centroids hash-matches
+    the brute-force oracle.  Self-pairs (vec_id == q_id) are masked;
+    ``mismatch_cols=(q_col, cand_col)`` also masks pairs whose two
+    columns are equal or NULL on either side — the SQL ``cand <> q``
+    filter (label-mismatch hard-negative mining).
     """
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype="float64")
-    c2 = (C * C).sum(1)
-    npr = min(nprobe, len(centroids))
-
-    @pandas_udf("array<int>")
-    def probes(e: pd.Series) -> pd.Series:
-        X = np.stack(e.to_numpy())
-        nrm = np.linalg.norm(X, axis=1)
-        Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
-        D = c2[None, :] - 2.0 * (Xn @ C.T)
-        idx = np.argsort(D, axis=1, kind="stable")[:, :npr]  # ties -> low id
-        return pd.Series(list(idx.astype("int32")))
-
     q_mis = [mismatch_cols[0]] if mismatch_cols else []
     c_mis = [mismatch_cols[1]] if mismatch_cols else []
     probe = queries.select(
-        "q_id", "q_emb", *q_mis, F.explode(probes(F.col("q_emb"))).alias("bucket")
+        "q_id", "q_emb", *q_mis,
+        F.explode(_probe_cells(F.col("q_emb"), centroids, nprobe)).alias("bucket"),
     )
     cand = indexed.select("vec_id", "emb", "nrm", "bucket", *c_mis)
 
@@ -291,77 +278,34 @@ def ivf_search_blocked(
     def score(qdf: pd.DataFrame, cdf: pd.DataFrame) -> pd.DataFrame:
         if qdf.empty or cdf.empty:
             return empty
+        cdf = cdf.sort_values("vec_id")  # column order = tie order
         Q = np.stack(qdf["q_emb"].to_numpy())
         B = np.stack(cdf["emb"].to_numpy())
+        qn = np.sqrt(_fold_dot(Q, Q))
         cn = cdf["nrm"].to_numpy()
-        if fold_order:
-            # sequential-over-dims accumulation, vectorized over pairs:
-            # bit-identical to the aggregate(zip_with) left fold (and
-            # to _norm for qn); no zero-guards, like ivf_search
-            d = Q.shape[1]
-            D = np.zeros((Q.shape[0], B.shape[0]))
-            S = np.zeros(Q.shape[0])
-            for i in range(d):
-                D += np.multiply.outer(Q[:, i], B[:, i])
-                S += Q[:, i] * Q[:, i]
-            qn = np.sqrt(S)
-            M = D / np.outer(qn, cn)
-        else:
-            qn = np.linalg.norm(Q, axis=1)
-            M = (Q @ B.T) / np.outer(
-                np.where(qn == 0, 1.0, qn), np.where(cn == 0, 1.0, cn)
-            )
+        cos = _cos(_fold_dot(Q[:, None], B[None]), qn[:, None], cn[None, :])
         qid = qdf["q_id"].to_numpy()
         cid = cdf["vec_id"].to_numpy()
-        M[qid[:, None] == cid[None, :]] = -np.inf
+        drop = qid[:, None] == cid[None, :]
         if mismatch_cols:
             ql = qdf[mismatch_cols[0]].to_numpy()
             cl = cdf[mismatch_cols[1]].to_numpy()
-            mask = ql[:, None] == cl[None, :]
-            if fold_order:
-                # SQL three-valued `<>`: a NULL label on either side
-                # drops the pair (the row path's filter semantics)
-                qnull = pd.isna(ql)
-                cnull = pd.isna(cl)
-                mask = mask | qnull[:, None] | cnull[None, :]
-            M[mask] = -np.inf
-        kk = min(k, M.shape[1])
-        # fully vectorized per-row top-k with the (-cos, vec_id) tiebreak:
-        # argpartition selects, then a stable sort by vec_id followed by a
-        # stable sort by -cos orders each row (a per-row Python loop here
-        # measured 10x the matmul cost at 100k+ probe rows)
-        part = np.argpartition(-M, kk - 1, axis=1)[:, :kk]
-        pv = np.take_along_axis(M, part, axis=1)
-        pc = cid[part]
-        o1 = np.argsort(pc, axis=1, kind="stable")
-        pv = np.take_along_axis(pv, o1, axis=1)
-        pc = np.take_along_axis(pc, o1, axis=1)
-        o2 = np.argsort(-pv, axis=1, kind="stable")  # ties keep vec_id asc
-        pv = np.take_along_axis(pv, o2, axis=1)
-        pc = np.take_along_axis(pc, o2, axis=1)
-        keep = ~np.isneginf(pv)
-        q_rep = np.broadcast_to(qid[:, None], pv.shape)
-        return pd.DataFrame(
-            {"q_id": q_rep[keep], "vec_id": pc[keep], "cos": pv[keep]}
-        )
+            drop |= (ql[:, None] == cl[None, :]) | pd.isna(ql)[:, None] | pd.isna(cl)[None, :]
+        qi, ci = np.nonzero(_top_k_mask(_rank_key(cos, drop), k))
+        return pd.DataFrame({"q_id": qid[qi], "vec_id": cid[ci], "cos": cos[qi, ci]})
 
     scored = (
         probe.groupBy("bucket")
         .cogroup(cand.groupBy("bucket"))
         .applyInPandas(lambda lp, rp: score(lp, rp), schema=out_schema)
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank_in_group", F.row_number().over(w).cast("int"))
-        .where(F.col("rank_in_group") <= k)
-        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
-    )
+    return _window_top_k(scored, k)
 
 
 def ivf_assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Incremental index maintenance: bucket NEW vectors against the
-    EXISTING centroids — no retrain, no shuffle (the centroid table is a
-    literal array; assignment is an argmin column expression).  The
+    EXISTING centroids — no retrain, no shuffle (the centroids ride the
+    UDF closure; assignment is one Arrow matmul per batch).  The
     standard IVF lifecycle at 100 TB: train the quantizer once on a
     sample, assign every arriving batch with this, re-train only on
     measured drift (bucket-occupancy skew).  Output schema matches
@@ -376,28 +320,19 @@ def _assign_bucket(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
     One Arrow-batched matmul assigns a whole batch (same pattern as the
     LSH plane projections): k×d distances per row as per-row HOF folds
     are k*d interpreted lambda evaluations each — measured seconds at
-    only 2000×16×64 — where ``X @ C.T`` is one BLAS call.  Ties break to
-    the smaller bucket id (np.argmin takes the first minimum), matching
-    the column-expression formulation this replaced."""
-    import numpy as np
-    import pandas as pd
+    only 2000×16×64 — where ``X @ C.T`` is one BLAS call.  The bucket
+    is the first cell :func:`_nearest_cells` probes, so every search
+    probes a vector's own bucket first; ties break to the smaller id."""
     from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype="float64")  # k x d, unit-normalized
-    c2 = (C * C).sum(1)
 
     @pandas_udf("nrm double, bucket int")
     def assign(e: pd.Series) -> pd.DataFrame:
         X = np.stack(e.to_numpy())
-        nrm = np.linalg.norm(X, axis=1)
-        Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
-        # ||xn||^2 is constant 1 — argmin over c2 - 2 xn·c matches the
-        # full spherical distance
-        b = (c2[None, :] - 2.0 * (Xn @ C.T)).argmin(1)
-        return pd.DataFrame({"nrm": nrm, "bucket": b.astype("int32")})
+        b = _nearest_cells(X, centroids, 1)[:, 0]
+        return pd.DataFrame({"nrm": np.linalg.norm(X, axis=1), "bucket": b.astype("int32")})
 
     # asNondeterministic: the UDF IS deterministic per row, but a
-    # downstream filter on ``bucket`` (ivfpq_search_blocked's probed-
+    # downstream filter on ``bucket`` (ivfpq_search's probed-
     # cell pruning) gets pushed below this projection and the optimizer
     # then evaluates the UDF TWICE per row — once under the pushed
     # filter, once in the surviving projection (two ArrowEvalPython
@@ -580,7 +515,9 @@ def ivf_search_persisted(
     the union of every query's nprobe nearest buckets becomes a static
     ``bucket IN (...)`` predicate — so the index scan prunes to the
     probed partitions before any row is read — and the pruned index
-    flows through the same exact-rerank ivf_search.
+    flows through the same exact-rerank ivf_search.  The prefilter and
+    the search probe with the same :func:`_nearest_cells`, so the
+    prefilter never drops a cell the search probes.
 
     CONTRACT: this is the POINT-LOOKUP path — the query set is collected
     to the driver (that is what enables the static partition-pruning
@@ -588,14 +525,10 @@ def ivf_search_persisted(
     OOMing the driver; bulk both-sides-large search belongs to
     :func:`knn_join`, which keeps both sides distributed and meets them
     inside shared IVF cells."""
-    import numpy as np
-
     cent_rows = warehouse.read(f"{table}__centroids").collect()
     centroids = [
         c["centroid"] for c in sorted(cent_rows, key=lambda r: r["bucket"])
     ]
-    C = np.array(centroids)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     q_local = queries.select("q_id", "q_emb").limit(max_queries + 1).collect()
     if len(q_local) > max_queries:
         raise ValueError(
@@ -604,13 +537,11 @@ def ivf_search_persisted(
             "(both-sides-large) nearest-neighbor search, or raise max_queries "
             "if the driver can hold the query set"
         )
-    probed: set[int] = set()
-    for r in q_local:
-        q = np.array(r["q_emb"], dtype=float)
-        qn = q / (np.linalg.norm(q) or 1.0)
-        d2 = ((Cn - qn) ** 2).sum(axis=1)
-        probed.update(int(b) for b in np.argsort(d2)[:nprobe])
-    index = warehouse.read(table).where(F.col("bucket").isin(sorted(probed)))
+    probed: list[int] = []
+    if q_local:
+        Q = np.array([r["q_emb"] for r in q_local], dtype="float64")
+        probed = np.unique(_nearest_cells(Q, centroids, nprobe)).tolist()
+    index = warehouse.read(table).where(F.col("bucket").isin(probed))
     return ivf_search(index, centroids, queries, k=k, nprobe=nprobe)
 
 
@@ -638,112 +569,26 @@ def semantic_dedup_pairs(
     unlikely for genuinely-near pairs: vectors at cosine >= 0.99 have
     near-identical centroid distances, so their probe sets overlap.
 
+    Each cell scores ALL its pairs as one block inside applyInPandas
+    (``_fold_dot(X, X)`` over stored norms — the fold's doubles) and
+    emits only the >= tau survivors, so the embeddings never ride a
+    pair join.  Per-cell working memory is (cell x dim) + (cell x cell)
+    floats.  Multi-probe assignment duplicates boundary pairs into up
+    to probe^2 shared cells; an order-free min-cos groupBy dedupes them
+    (cos is bit-identical across the copies).  A zero-norm vector pairs
+    with nothing (NULL cosine).
+
     ``emb``: (vec_id, emb array<double>). Returns (vec_a, vec_b, cos)
     with vec_a < vec_b, distinct pairs.
     """
-    indexed, centroids = ivf_build(
-        emb.select("vec_id", F.col("emb").alias("embedding")), k_centroids=k_centroids, seed=seed
-    )
-    # multi-assign each vector to its `probe` nearest cells (same argmin
-    # expression as ivf_search's query-side probing)
-    cents = F.array(*[F.array(*[F.lit(v) for v in c]) for c in centroids])
-    qn = _l2_normalize(F.col("emb"))
-    dists = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(c, qn, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda s, x: s + x,
-        ),
-    )
-    n_cent = len(centroids)
-    assigned = indexed.select("vec_id", "emb", "nrm").withColumn(
-        "bucket",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        F.zip_with(
-                            dists,
-                            F.sequence(F.lit(0), F.lit(n_cent - 1)),
-                            lambda d, i: F.struct(d.alias("d"), i.alias("bucket")),
-                        )
-                    ),
-                    1,
-                    probe,
-                ),
-                lambda s: s["bucket"],
-            )
-        ),
-    )
-    a, b = assigned.alias("a"), assigned.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            (
-                _dot(F.col("a.emb"), F.col("b.emb")) / (F.col("a.nrm") * F.col("b.nrm"))
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= tau)
-        # order-free dedup: cos is bit-identical across duplicate pair
-        # rows, so min == the value and survives task retry unchanged
-        # (dropDuplicates' first() does not — determinism lint)
-        .groupBy("vec_a", "vec_b")
-        .agg(F.min("cos").alias("cos"))
-    )
-    return pairs
-
-
-def semantic_dedup_pairs_blocked(
-    emb: DataFrame,
-    tau: float = 0.99,
-    k_centroids: int = 8,
-    seed: int = 42,
-    probe: int = 2,
-) -> DataFrame:
-    """Block-matmul PRODUCTION twin of :func:`semantic_dedup_pairs`
-    (same contract: (vec_a, vec_b, cos), vec_a < vec_b, distinct): each
-    cluster cell scores ALL its pairs with one ``Xn @ Xn.T`` BLAS call
-    inside applyInPandas and emits only the >= tau survivors — the
-    embeddings never ride a pair join, so the shuffled volume is
-    O(n * probe * dim) for the cell assignment plus the (tiny) survivor
-    pairs, instead of (n/k)^2 * k pairs x dim through the self-join.
-    Per-cell working memory is (cell x dim) + (cell x cell) floats —
-    bounded by k_centroids, which grows with the corpus (SemDeDup uses
-    ~n/10k cells).  Multi-probe assignment duplicates boundary pairs
-    into up to probe^2 shared cells; the min-cos groupBy dedupes them.
-    The float-sum order inside the dot differs from the fold path
-    (BLAS), so the hash-oracled catalog entry keeps
-    ``semantic_dedup_pairs``; this twin is pinned pair-set-equal in
-    pytest."""
-    from pyspark.sql.functions import pandas_udf
-
     indexed, centroids = ivf_build(
         emb.select("vec_id", F.col("emb").alias("embedding")),
         k_centroids=k_centroids,
         seed=seed,
     )
-    C = np.asarray(centroids, dtype="float64")
-    c2 = (C * C).sum(1)
-    npr = min(probe, len(centroids))
-
-    @pandas_udf("array<int>")
-    def probes(e: pd.Series) -> pd.Series:
-        X = np.stack(e.to_numpy())
-        nrm = np.linalg.norm(X, axis=1)
-        Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
-        D = c2[None, :] - 2.0 * (Xn @ C.T)
-        idx = np.argsort(D, axis=1, kind="stable")[:, :npr]
-        return pd.Series(list(idx.astype("int32")))
-
     assigned = indexed.select(
-        "vec_id", "emb", F.explode(probes(F.col("emb"))).alias("bucket")
+        "vec_id", "emb", "nrm",
+        F.explode(_probe_cells(F.col("emb"), centroids, probe)).alias("bucket"),
     )
 
     it = dict(emb.select("vec_id", "emb").dtypes)["vec_id"]
@@ -756,11 +601,10 @@ def semantic_dedup_pairs_blocked(
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         X = np.stack(pdf["emb"].to_numpy())
-        nrm = np.linalg.norm(X, axis=1)
-        Xn = X / np.where(nrm == 0, 1.0, nrm)[:, None]
-        M = Xn @ Xn.T
+        nrm = pdf["nrm"].to_numpy()
+        M = _cos(_fold_dot(X[:, None], X[None]), nrm[:, None], nrm[None, :])
         ia, ib = np.triu_indices(len(ids), k=1)  # sorted ids -> vec_a < vec_b
-        keep = M[ia, ib] >= tau
+        keep = M[ia, ib] >= tau  # NaN (zero norm) never passes
         return pd.DataFrame(
             {"vec_a": ids[ia[keep]], "vec_b": ids[ib[keep]], "cos": M[ia, ib][keep]}
         )
@@ -769,7 +613,7 @@ def semantic_dedup_pairs_blocked(
         assigned.groupBy("bucket")
         .applyInPandas(lambda pdf: cell(pdf), schema=out_schema)
         .groupBy("vec_a", "vec_b")
-        .agg(F.min("cos").alias("cos"))  # dedupe multi-probe duplicates
+        .agg(F.min("cos").alias("cos"))
     )
 
 
@@ -780,9 +624,7 @@ def knn_join(
     k_centroids: int = 16,
     nprobe: int = 4,
     seed: int = 42,
-    candidate_filter=None,
     mismatch_cols: tuple[str, str] | None = None,
-    fold_order: bool = False,
 ) -> DataFrame:
     """Approximate k-NN JOIN: every row of ``left`` (q_id, q_emb) gets
     its k nearest ``right`` rows (vec_id, emb[, extra cols]) by cosine
@@ -792,18 +634,15 @@ def knn_join(
     coarse quantizer, left probes its ``nprobe`` nearest cells, and the
     equi-join on bucket bounds the pair space to ~nprobe/k_centroids of
     the cross product, tunable recall-vs-cost.  With a label-mismatch
-    constraint this is hard-negative mining for contrastive training
-    (the quality upgrade over the ring-sampled ``negative_pairs``:
-    nearest WRONG-class examples, not random ones).  Recall-gated in
-    tests against the brute-force join.
+    constraint (``mismatch_cols=(q_col, cand_col)``) this is
+    hard-negative mining for contrastive training (the quality upgrade
+    over the ring-sampled ``negative_pairs``: nearest WRONG-class
+    examples, not random ones).  Recall-gated in tests against the
+    brute-force join.
 
-    Two scoring paths: the default is the block-matmul search
-    (``ivf_search_blocked``; pass the label constraint as
-    ``mismatch_cols=(q_col, cand_col)``) — embeddings never ride the
-    pair join and dots run in BLAS.  Passing an arbitrary
-    ``candidate_filter`` Column routes through the row-expression
-    ``ivf_search``, which also pins the float-sum order the
-    exact-attestation oracles hash.
+    Scoring is :func:`ivf_search`'s block path: embeddings never ride
+    the pair join, and every cosine is the fold's double, so
+    nprobe = k_centroids equals the exact label-constrained top-k.
     """
     # non-embedding payload columns (e.g. the mismatch label) ride the
     # assignment projection into the index instead of a corpus-wide
@@ -813,14 +652,8 @@ def knn_join(
     indexed, centroids = ivf_build(
         right, k_centroids=k_centroids, seed=seed, extra_cols=extra or None
     )
-    if candidate_filter is not None:
-        return ivf_search(
-            indexed, centroids, left, k=k, nprobe=nprobe,
-            candidate_filter=candidate_filter,
-        )
-    return ivf_search_blocked(
-        indexed, centroids, left, k=k, nprobe=nprobe,
-        mismatch_cols=mismatch_cols, fold_order=fold_order,
+    return ivf_search(
+        indexed, centroids, left, k=k, nprobe=nprobe, mismatch_cols=mismatch_cols
     )
 
 
@@ -1002,6 +835,51 @@ def pq_encode(base: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     )
 
 
+def _adc_rerank(Q, qids, qn, ADC, pdf, shortlist):
+    """Score one block of PQ-coded candidates against the queries whose
+    rows are given: ``approx[q, b] = sum_s ADC[q, s, codes[b, s]]`` as
+    one fancy-indexed gather (no per-row lambdas), the block-local
+    top-``shortlist`` by approximate cosine (self-pairs masked), then
+    the exact fold-order cosine for those survivors only.  Returns the
+    survivors as (q_id, vec_id, cos) — per-block shortlists are a
+    superset of the global one, so the final window's top-k is at
+    least as good as a global shortlist's."""
+    pdf = pdf.sort_values("vec_id")  # column order = tie order
+    codes = np.stack(pdf["codes"].to_numpy())  # B x m
+    nrm = pdf["nrm"].to_numpy()
+    cid = pdf["vec_id"].to_numpy()
+    m, ksub = ADC.shape[1], ADC.shape[2]
+    idx = np.arange(m)[None, :] * ksub + codes  # flattened (s * ksub + code)
+    approx = _cos(ADC.reshape(len(Q), -1)[:, idx].sum(2), qn[:, None], nrm[None, :])
+    drop = qids[:, None] == cid[None, :]
+    qi, bi = np.nonzero(_top_k_mask(_rank_key(approx, drop), shortlist))
+    X = np.stack(pdf["emb"].to_numpy())
+    exact = _cos(_fold_dot(Q[qi], X[bi]), qn[qi], nrm[bi])
+    return pd.DataFrame({"q_id": qids[qi], "vec_id": cid[bi], "cos": exact})
+
+
+def _adc_queries(queries: DataFrame, codebooks, query_cap: int):
+    """Collect the bounded query side (sorted by q_id) and build its
+    ADC tables: (q_ids, Q, sequential norms, n_q x m x ksub tables of
+    dot(query subvector, codebook entry))."""
+    q_local = queries.select("q_id", "q_emb").limit(query_cap + 1).collect()
+    if len(q_local) > query_cap:
+        raise ValueError(
+            f"PQ search builds per-query ADC tables driver-side and got more "
+            f"than query_cap={query_cap} rows; use knn_join for bulk search "
+            "or raise query_cap if the driver can hold the query set"
+        )
+    q_local.sort(key=lambda r: r["q_id"])
+    Cs = [np.asarray(cb, dtype="float64") for cb in codebooks]
+    dsub = Cs[0].shape[1]
+    Q = np.array([r["q_emb"] for r in q_local], dtype="float64").reshape(-1, len(Cs) * dsub)
+    ADC = np.stack(
+        [Q[:, s * dsub : (s + 1) * dsub] @ C.T for s, C in enumerate(Cs)], axis=1
+    )
+    qids = np.asarray([r["q_id"] for r in q_local], dtype="int64")
+    return qids, Q, np.sqrt(_fold_dot(Q, Q)), ADC
+
+
 def pq_search(
     encoded: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1013,156 +891,32 @@ def pq_search(
     """ADC (asymmetric distance computation) search: per query, the dot
     products between its subvectors and every codebook entry form an
     m×ksub lookup table; a candidate's approximate inner product is then
-    ``m`` table lookups instead of ``d`` multiplies — pure zip_with /
-    aggregate column expressions over the broadcast query side, no UDF
-    in the scan. The top-``shortlist`` by approximate cosine re-rank
-    EXACTLY (same fold order as sim_topk_cosine, so shortlist >= corpus
-    degenerates to brute force — the attestation mode).
+    ``m`` table lookups instead of ``d`` multiplies.  One mapInPandas
+    pass scores every batch against ALL queries (:func:`_adc_rerank`),
+    exact-reranks each batch's top-``shortlist`` with the fold-order
+    kernel, and a final per-query window takes global top-k — so
+    shortlist >= corpus degenerates to brute force, the attestation
+    mode.  The gather is one C pass where a zip_with/aggregate lookup
+    fold is ~80M interpreted lambda evaluations at 2M x 64 (77 s
+    against ~2 s measured).
 
     CONTRACT: the query side is collected driver-side to build the ADC
     tables (bounded by ``query_cap``, refuses instead of OOMing) — the
     point-lookup path, same contract as ivf_search_persisted; bulk
     search belongs to knn_join.
     """
-    q_local = queries.select("q_id", "q_emb").limit(query_cap + 1).collect()
-    if len(q_local) > query_cap:
-        raise ValueError(
-            f"pq_search builds per-query ADC tables driver-side and got more "
-            f"than query_cap={query_cap} rows; use knn_join for bulk search "
-            "or raise query_cap if the driver can hold the query set"
-        )
-    Cs = [np.asarray(cb, dtype="float64") for cb in codebooks]
-    dsub = Cs[0].shape[1]
-    rows = []
-    for r in q_local:
-        q = np.asarray(r["q_emb"], dtype="float64")
-        adc = [(Cs[s] @ q[s * dsub : (s + 1) * dsub]).tolist() for s in range(len(Cs))]
-        rows.append((r["q_id"], [float(v) for v in q], adc))
-    spark = encoded.sparkSession
-    qdf = spark.createDataFrame(
-        rows, "q_id bigint, q_emb array<double>, adc array<array<double>>"
-    ).withColumn("q_nrm", _norm(F.col("q_emb")))
-
-    pairs = encoded.crossJoin(F.broadcast(qdf)).where(F.col("vec_id") != F.col("q_id"))
-    approx_dot = F.aggregate(
-        F.zip_with("adc", "codes", lambda t, c: F.element_at(t, c + F.lit(1))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = pairs.withColumn("approx", approx_dot / (F.col("q_nrm") * F.col("nrm")))
-    w1 = W.partitionBy("q_id").orderBy(F.col("approx").desc(), F.col("vec_id").asc())
-    short = scored.withColumn("__r", F.row_number().over(w1)).where(
-        F.col("__r") <= shortlist
-    )
-    rer = short.select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cos"
-        ),
-    )
-    w2 = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        rer.withColumn("rank_in_group", F.row_number().over(w2).cast("int"))
-        .where(F.col("rank_in_group") <= k)
-        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
-    )
-
-
-def pq_search_blocked(
-    encoded: DataFrame,
-    codebooks: list[list[list[float]]],
-    queries: DataFrame,
-    k: int = 5,
-    shortlist: int = 64,
-    query_cap: int = 10_000,
-) -> DataFrame:
-    """Production ADC search: one mapInPandas pass scores every batch
-    against ALL queries with numpy fancy-indexed table lookups
-    (``adc[:, arange(m), codes]`` — a gather, no per-row lambdas),
-    keeps each batch's local top-``shortlist`` per query, computes the
-    EXACT cosine for those survivors in-batch (one small matmul), and
-    a final per-query window takes global top-k. Per-partition
-    shortlists are a superset of the global shortlist, so recall is
-    >= the column-expression path's at equal ``shortlist``.
-
-    The same fold-vs-BLAS float-order split as ivf_search vs
-    ivf_search_blocked: exact-attestation oracles keep ``pq_search``,
-    recall-gated production configs use this. Measured at 2M x 64:
-    77 s -> ~2 s for 5 queries (the zip_with/aggregate lookup fold is
-    ~80M interpreted lambda evaluations; the gather is one C pass).
-    """
-    q_local = queries.select("q_id", "q_emb").limit(query_cap + 1).collect()
-    if len(q_local) > query_cap:
-        raise ValueError(
-            f"pq_search_blocked builds per-query ADC tables driver-side and "
-            f"got more than query_cap={query_cap} rows; use knn_join for bulk "
-            "search or raise query_cap if the driver can hold the query set"
-        )
-    q_local.sort(key=lambda r: r["q_id"])
-    Cs = [np.asarray(cb, dtype="float64") for cb in codebooks]
-    m = len(Cs)
-    dsub = Cs[0].shape[1]
-    Q = np.stack([np.asarray(r["q_emb"], dtype="float64") for r in q_local])
-    qids = np.asarray([r["q_id"] for r in q_local])
-    qn = np.linalg.norm(Q, axis=1)
-    qn = np.where(qn == 0, 1.0, qn)
-    # n_q x m x ksub ADC tables: dot(query subvector, codebook entry)
-    ADC = np.stack(
-        [
-            np.stack([Cs[s] @ q[s * dsub : (s + 1) * dsub] for s in range(m)])
-            for q in Q
-        ]
-    )
+    qids, Q, qn, ADC = _adc_queries(queries, codebooks, query_cap)
     ct = dict(encoded.dtypes)["vec_id"]
-    out_schema = f"q_id bigint, vec_id {ct}, cos double"
 
     def score(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy())  # B x m
-            X = np.stack(pdf["emb"].to_numpy())  # B x d
-            nrm = pdf["nrm"].to_numpy()
-            cid = pdf["vec_id"].to_numpy()
-            nrm_safe = np.where(nrm == 0, 1.0, nrm)
-            # gather: approx[q, b] = sum_s ADC[q, s, codes[b, s]] via the
-            # flattened (s * ksub + code) index — one C pass, no lambdas
-            flat = ADC.reshape(len(Q), -1)  # n_q x (m * ksub)
-            idx = np.arange(m)[None, :] * ADC.shape[2] + codes  # B x m
-            approx = flat[:, idx].sum(2)  # n_q x B
-            approx = approx / np.outer(qn, nrm_safe)
-            approx[qids[:, None] == cid[None, :]] = -np.inf
-            kk = min(shortlist, approx.shape[1])
-            part = np.argpartition(-approx, kk - 1, axis=1)[:, :kk]
-            # exact cosine only for the local shortlist survivors
-            rows_q, rows_b, rows_c = [], [], []
-            for qi in range(len(Q)):
-                sel = part[qi][~np.isneginf(approx[qi, part[qi]])]
-                if not len(sel):
-                    continue
-                exact = (X[sel] @ Q[qi]) / (qn[qi] * nrm_safe[sel])
-                rows_q.append(np.full(len(sel), qids[qi]))
-                rows_b.append(cid[sel])
-                rows_c.append(exact)
-            if rows_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(rows_q),
-                        "vec_id": np.concatenate(rows_b),
-                        "cos": np.concatenate(rows_c),
-                    }
-                )
+            if len(Q) and not pdf.empty:
+                yield _adc_rerank(Q, qids, qn, ADC, pdf, shortlist)
 
     scored = encoded.select("vec_id", "emb", "nrm", "codes").mapInPandas(
-        score, schema=out_schema
+        score, schema=f"q_id bigint, vec_id {ct}, cos double"
     )
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank_in_group", F.row_number().over(w).cast("int"))
-        .where(F.col("rank_in_group") <= k)
-        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
-    )
+    return _window_top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1209,66 +963,6 @@ def ivfpq_build(
     return encoded, centroids, codebooks
 
 
-def _ivfpq_probe_frame(
-    encoded: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    queries: DataFrame,
-    nprobe: int,
-    query_cap: int,
-    with_adc: bool = True,
-    as_rows: bool = False,
-):
-    """Shared driver-side query prep: collect the bounded query set,
-    pick each query's nprobe nearest coarse cells (spherical metric,
-    ties to the smaller bucket id), and build its ADC tables. Returns
-    a (q_id, q_emb[, adc], bucket) frame — one row per (query, probe).
-
-    ``with_adc=False`` omits the nested array<array<double>> column:
-    the fold path needs it as a column expression, but the blocked
-    path recomputes the tables from q_emb inside the scorer (m x ksub
-    dots per batch are trivial) — and this pyarrow build SEGFAULTS
-    deserializing nested lists through the cogroup serializer, so the
-    nested column must never ride an applyInPandas input."""
-    q_local = queries.select("q_id", "q_emb").limit(query_cap + 1).collect()
-    if len(q_local) > query_cap:
-        raise ValueError(
-            f"ivfpq search collects the query side driver-side and got more "
-            f"than query_cap={query_cap} rows; use knn_join for bulk search"
-        )
-    q_local.sort(key=lambda r: r["q_id"])
-    C = np.asarray(centroids, dtype="float64")
-    Cs = [np.asarray(cb, dtype="float64") for cb in codebooks]
-    dsub = Cs[0].shape[1]
-    npr = min(nprobe, len(centroids))
-    rows = []
-    for r in q_local:
-        q = np.asarray(r["q_emb"], dtype="float64")
-        qn = q / (np.linalg.norm(q) or 1.0)
-        d2 = ((C - qn) ** 2).sum(1)
-        buckets = np.argsort(d2, kind="stable")[:npr]
-        if with_adc:
-            adc = [
-                (Cs[s] @ q[s * dsub : (s + 1) * dsub]).tolist() for s in range(len(Cs))
-            ]
-            rows.extend(
-                (r["q_id"], [float(v) for v in q], adc, int(b)) for b in buckets
-            )
-        else:
-            rows.extend((r["q_id"], [float(v) for v in q], int(b)) for b in buckets)
-    if as_rows:  # blocked path: rows stay driver-local (closure state)
-        return rows
-    spark = encoded.sparkSession
-    if with_adc:
-        return spark.createDataFrame(
-            rows,
-            "q_id bigint, q_emb array<double>, adc array<array<double>>, bucket int",
-        )
-    return spark.createDataFrame(
-        rows, "q_id bigint, q_emb array<double>, bucket int"
-    )
-
-
 def ivfpq_search(
     encoded: DataFrame,
     centroids: list[list[float]],
@@ -1279,148 +973,43 @@ def ivfpq_search(
     shortlist: int = 64,
     query_cap: int = 10_000,
 ) -> DataFrame:
-    """Fold-order IVF-PQ search (the exact-attestation path): probe the
-    nprobe nearest cells per query, ADC-score their members by code
-    lookups (zip_with/aggregate), shortlist by approximate cosine,
-    exact-rerank the survivors with the pinned-float-order fold. With
-    nprobe = k_centroids AND shortlist >= corpus this provably equals
-    brute force — the degeneracy the catalog oracle hashes. Production
-    configs use :func:`ivfpq_search_blocked`."""
-    probe = _ivfpq_probe_frame(
-        encoded, centroids, codebooks, queries, nprobe, query_cap
-    ).withColumn("q_nrm", _norm(F.col("q_emb")))
-    cand = encoded.join(probe, on="bucket").where(F.col("vec_id") != F.col("q_id"))
-    approx_dot = F.aggregate(
-        F.zip_with("adc", "codes", lambda t, c: F.element_at(t, c + F.lit(1))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    scored = cand.withColumn("approx", approx_dot / (F.col("q_nrm") * F.col("nrm")))
-    w1 = W.partitionBy("q_id").orderBy(F.col("approx").desc(), F.col("vec_id").asc())
-    short = scored.withColumn("__r", F.row_number().over(w1)).where(
-        F.col("__r") <= shortlist
-    )
-    rer = short.select(
-        "q_id",
-        "vec_id",
-        (_dot(F.col("q_emb"), F.col("emb")) / (F.col("q_nrm") * F.col("nrm"))).alias(
-            "cos"
-        ),
-    )
-    w2 = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        rer.withColumn("rank_in_group", F.row_number().over(w2).cast("int"))
-        .where(F.col("rank_in_group") <= k)
-        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
-    )
+    """IVF-PQ search — ZERO-shuffle scan shape: the probed bucket set
+    becomes a static ``bucket IN (...)`` predicate (with the index
+    partitioned by bucket — ivf_persist's layout — that prunes at the
+    directory level to nprobe/k_centroids of the data), and scoring is
+    one mapInPandas pass whose closure holds the bucket -> probing-
+    queries map.  Each batch groups its rows by bucket, ADC-gathers
+    every (cell-rows x probing-queries) block, and exact-reranks the
+    block-local top-``shortlist`` with the fold-order kernel
+    (:func:`_adc_rerank`); only those rows reach the final window.
+    With nprobe = k_centroids AND shortlist >= corpus this provably
+    equals brute force — the degeneracy the catalog oracle hashes.
 
-
-def ivfpq_search_blocked(
-    encoded: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 8,
-    shortlist: int = 64,
-    query_cap: int = 10_000,
-) -> DataFrame:
-    """Production IVF-PQ search — ZERO-shuffle scan shape: the probed
-    bucket set becomes a static ``bucket IN (...)`` predicate (with the
-    index partitioned by bucket — ivf_persist's layout — that prunes at
-    the directory level to nprobe/k_centroids of the data), and scoring
-    is one mapInPandas pass whose closure holds the bucket -> probing-
-    queries map. Each batch groups its rows by bucket (one np.unique),
-    ADC-gathers every (cell-rows x probing-queries) block, exact-reranks
-    the block-local top-``shortlist``, and only k rows per query reach
-    the final window. Per-block shortlists are a superset of the global
-    one, so recall >= the fold path's at equal dials.
-
-    First cut cogrouped probe rows with index cells by bucket — that
+    A first cut cogrouped probe rows with index cells by bucket — that
     SHUFFLES the whole encoded index (2M rows: 9.3 s, barely beating
     the unpruned PQ scan at 11.2 s); this shape measures ~2 s because
     cell pruning cuts compute without moving any index row."""
-    m = len(codebooks)
-    Cs = [np.asarray(cb, dtype="float64") for cb in codebooks]
-    dsub = Cs[0].shape[1]
-    ksub = Cs[0].shape[0]
-    probe = _ivfpq_probe_frame(
-        encoded, centroids, codebooks, queries, nprobe, query_cap,
-        with_adc=False, as_rows=True,
-    )
-    by_q: dict[int, list[float]] = {}
-    probed_of: dict[int, list[int]] = {}
-    for q_id, q_emb, bucket in probe:
-        by_q[q_id] = q_emb
-        probed_of.setdefault(int(bucket), []).append(q_id)
-    qids_sorted = sorted(by_q)
-    qpos = {q: i for i, q in enumerate(qids_sorted)}
-    Q = np.stack([np.asarray(by_q[q], dtype="float64") for q in qids_sorted])
-    qn = np.linalg.norm(Q, axis=1)
-    qn = np.where(qn == 0, 1.0, qn)
-    qid_arr = np.asarray(qids_sorted)
-    ADC = np.empty((len(Q), m, ksub))
-    for s in range(m):
-        ADC[:, s, :] = Q[:, s * dsub : (s + 1) * dsub] @ Cs[s].T
-    flatADC = ADC.reshape(len(Q), -1)
-    probing = {b: np.asarray([qpos[q] for q in qs]) for b, qs in probed_of.items()}
+    qids, Q, qn, ADC = _adc_queries(queries, codebooks, query_cap)
+    probing: dict[int, list[int]] = {}
+    for qi, cells in enumerate(_nearest_cells(Q, centroids, nprobe)):
+        for b in cells:
+            probing.setdefault(int(b), []).append(qi)
+    probing = {b: np.asarray(qs) for b, qs in probing.items()}
 
     cand = encoded.select("vec_id", "emb", "nrm", "codes", "bucket").where(
         F.col("bucket").isin(sorted(probing))
     )
     ct = dict(encoded.dtypes)["vec_id"]
-    out_schema = f"q_id bigint, vec_id {ct}, cos double"
 
     def score(batches):
         for pdf in batches:
-            if pdf.empty:
-                continue
-            buckets = pdf["bucket"].to_numpy()
-            codes_all = np.stack(pdf["codes"].to_numpy())
-            X_all = np.stack(pdf["emb"].to_numpy())
-            nrm_all = pdf["nrm"].to_numpy()
-            cid_all = pdf["vec_id"].to_numpy()
-            rows_q, rows_b, rows_c = [], [], []
-            for b in np.unique(buckets):
-                qsel = probing.get(int(b))
-                if qsel is None:
-                    continue
-                mask = buckets == b
-                codes = codes_all[mask]
-                X = X_all[mask]
-                nrm_safe = np.where(nrm_all[mask] == 0, 1.0, nrm_all[mask])
-                cid = cid_all[mask]
-                idx = np.arange(m)[None, :] * ksub + codes
-                approx = flatADC[qsel][:, idx].sum(2) / np.outer(
-                    qn[qsel], nrm_safe
-                )
-                approx[qid_arr[qsel][:, None] == cid[None, :]] = -np.inf
-                kk = min(shortlist, approx.shape[1])
-                part = np.argpartition(-approx, kk - 1, axis=1)[:, :kk]
-                for row, qi in enumerate(qsel):
-                    sel = part[row][~np.isneginf(approx[row, part[row]])]
-                    if not len(sel):
-                        continue
-                    exact = (X[sel] @ Q[qi]) / (qn[qi] * nrm_safe[sel])
-                    rows_q.append(np.full(len(sel), qid_arr[qi]))
-                    rows_b.append(cid[sel])
-                    rows_c.append(exact)
-            if rows_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(rows_q),
-                        "vec_id": np.concatenate(rows_b),
-                        "cos": np.concatenate(rows_c),
-                    }
-                )
+            for b, cell in pdf.groupby("bucket"):
+                qs = probing.get(int(b))
+                if qs is not None:
+                    yield _adc_rerank(Q[qs], qids[qs], qn[qs], ADC[qs], cell, shortlist)
 
-    scored = cand.mapInPandas(score, schema=out_schema)
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank_in_group", F.row_number().over(w).cast("int"))
-        .where(F.col("rank_in_group") <= k)
-        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
-    )
+    scored = cand.mapInPandas(score, schema=f"q_id bigint, vec_id {ct}, cos double")
+    return _window_top_k(scored, k)
 
 
 def ivfpq_persist(
@@ -1481,7 +1070,7 @@ def ivfpq_search_persisted(
     driver-side (k_centroids + m*ksub tiny rows), the probed-cell union
     becomes a static ``bucket IN (...)`` predicate — directory-level
     partition pruning before any row is read — and the pruned scan
-    flows through the zero-shuffle blocked scorer."""
+    flows through the zero-shuffle :func:`ivfpq_search`."""
     cent_rows = warehouse.read(f"{table}__centroids").collect()
     centroids = [
         c["centroid"] for c in sorted(cent_rows, key=lambda r: r["bucket"])
@@ -1494,10 +1083,10 @@ def ivfpq_search_persisted(
         [by_sub[s][j] for j in sorted(by_sub[s])] for s in sorted(by_sub)
     ]
     encoded = warehouse.read(table)
-    # ivfpq_search_blocked re-derives the probed set and applies its own
-    # bucket IN filter over this frame — partition pruning composes with
-    # the warehouse's file-stats skipping.
-    return ivfpq_search_blocked(
+    # ivfpq_search derives the probed set and applies its own bucket IN
+    # filter over this frame — partition pruning composes with the
+    # warehouse's file-stats skipping.
+    return ivfpq_search(
         encoded, centroids, codebooks, queries,
         k=k, nprobe=nprobe, shortlist=shortlist, query_cap=query_cap,
     )

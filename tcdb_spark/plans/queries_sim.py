@@ -4,16 +4,17 @@ tcdb/etl/process_storms.py:43-56).
 
 Brute-force exact top-k is the correctness baseline (oracle-checked).
 
-Attestation layout (round-3 contract): each approximate operator ships
-BOTH a driver-attestable exact-mode degeneracy (registered in the
-catalog with a DuckDB hash-match oracle — all buckets probed, so the
-result equals brute force while exercising the identical
-bucket -> candidate-join -> re-rank machinery) AND the pruned
-production configuration (`*_pruned` module functions) whose recall@5
-is gated in pytest (tests/test_scale_ops.py, tests/test_training_ops.py)
-and whose cost is tracked in bench.py. The pruning heuristic is the
-ONLY thing the exact mode does not cover — exactly what the recall
-gates measure.
+Attestation layout: each approximate operator has ONE search function
+(operators/similarity.py) run under two sets of dials.  The registered
+lane is its exact-mode degeneracy (all buckets probed, or a shortlist
+>= corpus), checked against a DuckDB hash-match oracle: the result
+equals brute force while exercising the identical bucket -> candidate
+block -> re-rank machinery.  The `*_pruned` module function is the
+production configuration of the same code — only its dials differ — and
+its recall@5 is gated in pytest (tests/test_scale_ops.py,
+tests/test_training_ops.py, tests/test_clustering.py) and its cost is
+tracked in bench.py.  The pruning heuristic is the ONLY thing the exact
+mode does not cover — exactly what the recall gates measure.
 """
 
 from __future__ import annotations
@@ -314,12 +315,11 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production IVF configuration: spherical k-means coarse
     quantizer (fixed seed, driver-trained on a bounded sample), probe
-    the 8 nearest of 16 buckets per query, block-matmul exact cosine
-    top-k inside (operators/similarity.ivf_search_blocked — embeddings
-    never ride the pair join). nprobe is the recall/cost dial: 8/16
-    halves the scan vs exhaustive; recall@5 gated in
-    tests/test_scale_ops.py."""
-    from tcdb_spark.operators.similarity import ivf_build, ivf_search_blocked
+    the 8 nearest of 16 buckets per query, block exact cosine top-k
+    inside (operators/similarity.ivf_search — embeddings never ride the
+    pair join). nprobe is the recall/cost dial: 8/16 halves the scan vs
+    exhaustive; recall@5 gated in tests/test_scale_ops.py."""
+    from tcdb_spark.operators.similarity import ivf_build, ivf_search
 
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     indexed, centroids = ivf_build(e, k_centroids=16, seed=42)
@@ -327,7 +327,7 @@ def sim_ann_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.where(F.col("vec_id") < N_QUERIES)
         .select(F.col("vec_id").alias("q_id"), F.col("embedding").cast("array<double>").alias("q_emb"))
     )
-    return ivf_search_blocked(indexed, centroids, q, k=K, nprobe=8)
+    return ivf_search(indexed, centroids, q, k=K, nprobe=8)
 
 
 @register("sim_ann_ivf", oracle=_BRUTE_ORACLE)
@@ -461,8 +461,8 @@ def hard_negative_mining_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production configuration of the hard-negative k-NN join: left
     multi-probes its 6 nearest of 16 IVF cells, so the pair space is
     ~6/16 of the cross product and shrinks further as k_centroids grows
-    at scale; scoring runs the block-matmul path (one BLAS matmul per
-    bucket block, embeddings never ride the pair join). recall@5 >= 0.7
+    at scale; scoring runs the same block path as the exact lane
+    (embeddings never ride the pair join). recall@5 >= 0.7
     vs the brute-force label-constrained join is gated in
     tests/test_training_ops.py."""
     from tcdb_spark.operators.similarity import knn_join
@@ -501,13 +501,11 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``hard_negative_mining_pruned``, nprobe=6) is recall@5-gated in
     pytest.
 
-    Round 9: scoring rides the block path in ``fold_order`` mode —
-    bit-identical cosines to the row-expression fold it replaces
-    (sequential-over-dims accumulation; the SQL ``<>`` filter's
-    null-drop semantics preserved in the mask), but vectorized instead
-    of ~4M interpreted per-pair lambda folds (23.7 s -> ~1 s at sf0.1).
-    Full-output bit-equality vs the row path is pinned in
-    tests/test_scale_ops.py; oracle re-attested."""
+    Scoring is ivf_search's block path: fold-order cosines
+    (sequential-over-dims accumulation, the doubles of an
+    ``aggregate(zip_with)`` fold) and the SQL ``<>`` filter's null-drop
+    semantics in the mask, vectorized in numpy — an interpreted
+    per-pair lambda fold measured 23.7 s at sf0.1, this ~1 s."""
     from tcdb_spark.operators.similarity import knn_join
 
     emb = load_tables(spark, sf_dir, "embeddings")["embeddings"]
@@ -523,7 +521,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         k_centroids=16,
         nprobe=16,
         mismatch_cols=("q_label", "label"),
-        fold_order=True,
     ).select("q_id", "vec_id", "cosine", "rank_in_group")
 
 
@@ -598,10 +595,8 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pq_lane(
-    spark: SparkSession, sf_dir: str, shortlist: int, blocked: bool = False
-) -> DataFrame:
-    from tcdb_spark.operators.similarity import pq_build, pq_search, pq_search_blocked
+def _pq_lane(spark: SparkSession, sf_dir: str, shortlist: int) -> DataFrame:
+    from tcdb_spark.operators.similarity import pq_build, pq_search
 
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     encoded, codebooks = pq_build(e, m=8, ksub=16, seed=42)
@@ -609,19 +604,18 @@ def _pq_lane(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").cast("array<double>").alias("q_emb"),
     )
-    search = pq_search_blocked if blocked else pq_search
-    return search(encoded, codebooks, q, k=K, shortlist=shortlist)
+    return pq_search(encoded, codebooks, q, k=K, shortlist=shortlist)
 
 
 def sim_ann_pq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production PQ configuration: 8 subspaces × 16 codes (8
     codes/vector vs 64 float64 components — 64× smaller in the scan),
-    ADC shortlist of 48 by approximate cosine via the Arrow-gather
-    blocked scorer (pq_search_blocked — measured 77 s -> ~2 s at 2M
-    rows vs the lambda-fold path), exact re-rank on the survivors
-    only. The shortlist size is the recall/cost dial; recall@5 is
-    gated in tests/test_clustering.py."""
-    return _pq_lane(spark, sf_dir, shortlist=48, blocked=True)
+    ADC shortlist of 48 by approximate cosine via the Arrow gather
+    (pq_search — measured 77 s -> ~2 s at 2M rows vs a lambda-fold
+    lookup), exact re-rank on the survivors only. The shortlist size is
+    the recall/cost dial; recall@5 is gated in
+    tests/test_clustering.py."""
+    return _pq_lane(spark, sf_dir, shortlist=48)
 
 
 @register("sim_ann_pq", oracle=_BRUTE_ORACLE)
@@ -635,14 +629,8 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_lane(spark, sf_dir, shortlist=(1 << 31) - 1)
 
 
-def _ivfpq_lane(
-    spark: SparkSession, sf_dir: str, nprobe: int, shortlist: int, blocked: bool
-) -> DataFrame:
-    from tcdb_spark.operators.similarity import (
-        ivfpq_build,
-        ivfpq_search,
-        ivfpq_search_blocked,
-    )
+def _ivfpq_lane(spark: SparkSession, sf_dir: str, nprobe: int, shortlist: int) -> DataFrame:
+    from tcdb_spark.operators.similarity import ivfpq_build, ivfpq_search
 
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     encoded, centroids, codebooks = ivfpq_build(e, k_centroids=16, m=8, ksub=16, seed=42)
@@ -650,8 +638,7 @@ def _ivfpq_lane(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").cast("array<double>").alias("q_emb"),
     )
-    search = ivfpq_search_blocked if blocked else ivfpq_search
-    return search(
+    return ivfpq_search(
         encoded, centroids, codebooks, q, k=K, nprobe=nprobe, shortlist=shortlist
     )
 
@@ -662,7 +649,7 @@ def sim_ann_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, exact-rerank a 48-deep shortlist — both pruning dials live
     (cell pruning x code compression). recall@5 gated in
     tests/test_clustering.py."""
-    return _ivfpq_lane(spark, sf_dir, nprobe=8, shortlist=48, blocked=True)
+    return _ivfpq_lane(spark, sf_dir, nprobe=8, shortlist=48)
 
 
 @register("sim_ann_ivfpq", oracle=_BRUTE_ORACLE)
@@ -671,7 +658,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe = k_centroids probes every cell AND shortlist >= corpus
     reranks every member exactly, so the result provably equals brute
     force while the full two-level machinery executes (cell probe ->
-    bucket join -> ADC code scoring -> shortlist window -> exact
+    bucket block -> ADC code scoring -> block shortlist -> exact
     rerank). Both prunings are recall@5-gated over
     ``sim_ann_ivfpq_pruned``."""
-    return _ivfpq_lane(spark, sf_dir, nprobe=16, shortlist=(1 << 31) - 1, blocked=False)
+    return _ivfpq_lane(spark, sf_dir, nprobe=16, shortlist=(1 << 31) - 1)

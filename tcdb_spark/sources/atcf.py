@@ -28,6 +28,8 @@ from tcdb_spark.schemas import ADECK_COLUMNS, BDECK_COLUMNS
 
 _NUMERIC_DOUBLE = {"VMAX", "MSLP", "NE", "SE", "SW", "NW", "POUTER", "ROCI", "RMW"}
 _NUMERIC_INT = {"SNUM", "TAU"}
+# ATCF b-deck file name, e.g. .../bal092022.dat[.gz]: group 1 = season
+_DECK_FILE = r"(?i)(?:^|/)b[a-z]{2}\d{2}(\d{4})\.dat(?:\.gz)?$"
 
 
 def _project(lines: DataFrame, columns: list[str], min_fields: int, value_col: str = "value") -> DataFrame:
@@ -120,11 +122,16 @@ def observations_from_bdeck(parsed: DataFrame) -> DataFrame:
     ).agg(*aggs)
 
 
-def storms_from_bdeck(parsed: DataFrame, season_col: str | None = None) -> DataFrame:
+def storms_from_bdeck(parsed: DataFrame) -> DataFrame:
     """Per-storm summary rows from parsed b-deck observations — the
     set-based form of the reference's per-file ``toStormDict``
     (tcdb/etl/atcf.py:289-337):
 
+    - a storm is (BASIN, SNUM, season): the season is the year in the
+      ATCF deck file name (``b<bb><nn><yyyy>.dat``) when the lines
+      carry a ``source_file``, else the year of the storm's first fix —
+      so one batch holding bal092021.dat and bal092022.dat gives two
+      storms, not one spanning both seasons;
     - start/end = min/max DATETIME;
     - start lat/lon = first row's values (first = earliest DATETIME,
       lowest RAD as tiebreak, matching file order);
@@ -136,8 +143,15 @@ def storms_from_bdeck(parsed: DataFrame, season_col: str | None = None) -> DataF
     One aggregation over all storms at once instead of one pandas parse
     per file.
     """
+    # 0 = no deck file name: the season is then the first fix's year
+    file_season = (
+        F.regexp_extract(F.col("source_file"), _DECK_FILE, 1).try_cast("int")
+        if "source_file" in parsed.columns
+        else F.lit(None)
+    )
+    parsed = parsed.withColumn("__season", F.coalesce(file_season, F.lit(0)))
     first_ord = F.struct(F.col("DATETIME"), F.coalesce(F.col("RAD"), F.lit("0")))
-    grp = ["BASIN", "SNUM"] + ([season_col] if season_col else [])
+    grp = ["BASIN", "SNUM", "__season"]
     base = parsed.groupBy(*grp).agg(
         F.min("DATETIME").alias("start_date"),
         F.max("DATETIME").alias("end_date"),
@@ -149,7 +163,7 @@ def storms_from_bdeck(parsed: DataFrame, season_col: str | None = None) -> DataF
     )
     base = base.withColumn(
         "season",
-        (F.col(season_col) if season_col else F.year(F.col("start_date"))).cast("int"),
+        F.when(F.col("__season") > 0, F.col("__season")).otherwise(F.year(F.col("start_date"))),
     )
     names = deterministic_mode(parsed, grp, "STORMNAME", out="mode_name")
     base = base.join(names, on=grp, how="left")

@@ -410,8 +410,8 @@ def stream_embedding_index(
 ):
     """Streaming ANN index maintenance: embedding batches land as JSON,
     each micro-batch is bucketed against the FIXED trained centroids
-    (operators/similarity.ivf_assign — argmin column math, no retrain,
-    no shuffle) and MERGEd into the warehouse ``ann_index`` table on
+    (operators/similarity.ivf_assign — the search's own nearest-cell
+    probe, one Arrow matmul per batch, no retrain, no shuffle) and MERGEd into the warehouse ``ann_index`` table on
     vec_id.  Composed with the IVF lifecycle: train the quantizer once
     offline, keep assigning forever, retrain on measured occupancy
     drift.  Search (ivf_search) reads the same table, so the index is

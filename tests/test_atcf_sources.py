@@ -268,3 +268,38 @@ def test_deckdir_http_backend_loopback(spark, tmp_path):
     finally:
         srv.shutdown()
         srv.server_close()
+
+
+def test_bdeck_job_keeps_seasons_that_reuse_a_number_apart(spark, tmp_path):
+    """One batch holding bal092021.dat and bal092022.dat (AL09 reused a
+    season later) lands two storms keyed by the deck file's season, and
+    every observation is keyed to its own season's storm."""
+    from tcdb_spark.jobs.bdeck import run_bdeck_job
+    from tcdb_spark.sources.atcf import read_bdeck
+    from tcdb_spark.sources.warehouse import Warehouse
+
+    land = tmp_path / "b"
+    land.mkdir()
+    ian = [l for l in BDECK_LINES if l.startswith("AL, 09")]
+    larry = [l.replace(", 2022092", ", 2021090").replace("IAN", "LARRY") for l in ian]
+    (land / "bal092022.dat").write_text("\n".join(ian) + "\n")
+    (land / "bal092021.dat").write_text("\n".join(larry) + "\n")
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    now = F.lit("2022-09-26 12:00:00").cast("timestamp")
+    counts = run_bdeck_job(spark, read_bdeck(spark, str(land)), wh, "B__x", now=now)
+    assert counts == {"storms": 2, "observations": 4}
+
+    storms = {r["nhc_id"]: r for r in wh.read("storms").collect()}
+    assert {k: (v["season"], v["name"]) for k, v in storms.items()} == {
+        "AL092021": (2021, "TS-Larry"),
+        "AL092022": (2022, "TS-Ian"),
+    }
+    keyed = {
+        (r["storm_id"], r["datetime_utc"].year)
+        for r in wh.read("observations").collect()
+    }
+    assert keyed == {
+        (storms["AL092021"]["storm_id"], 2021),
+        (storms["AL092022"]["storm_id"], 2022),
+    }

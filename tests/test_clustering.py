@@ -213,13 +213,12 @@ def test_char_entropy_known_values(spark):
     assert out[2]["top_char_frac"] == 0.5
 
 
-def test_pq_blocked_equals_fold_path(spark):
-    """The Arrow-gather blocked scorer and the column-expression fold
-    path must return the same (q_id, vec_id, rank) sets at equal
-    shortlist — per-partition shortlists are a superset of the global
-    one, so top-k survivors coincide; cosines agree to float tolerance
-    (BLAS vs fold accumulation differs in the last ULP)."""
-    from tcdb_spark.operators.similarity import pq_build, pq_search, pq_search_blocked
+def test_pq_search_matches_bruteforce_ranks(spark):
+    """At shortlist >= corpus pq_search returns the brute-force top-k
+    exactly; at the pruned shortlist every survivor is exactly
+    re-ranked — its cosine is the pair's true cosine and ranks run
+    1..k in descending-cosine order."""
+    from tcdb_spark.plans import QUERIES
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     encoded, codebooks = pq_build(e, m=8, ksub=16, seed=42)
@@ -227,18 +226,29 @@ def test_pq_blocked_equals_fold_path(spark):
         F.col("vec_id").alias("q_id"),
         F.col("embedding").cast("array<double>").alias("q_emb"),
     )
+    brute = {
+        (r["q_id"], r["vec_id"]): (r["rank_in_group"], r["cosine"])
+        for r in QUERIES["sim_topk_cosine"](spark, SF).collect()
+    }
+    vecs = {
+        r["vec_id"]: np.asarray(r["e"])
+        for r in e.select("vec_id", F.col("embedding").cast("array<double>").alias("e")).collect()
+    }
     for sl in (48, 1 << 30):
-        fold = {
+        got = {
             (r["q_id"], r["vec_id"]): (r["rank_in_group"], r["cosine"])
             for r in pq_search(encoded, codebooks, q, k=5, shortlist=sl).collect()
         }
-        blk = {
-            (r["q_id"], r["vec_id"]): (r["rank_in_group"], r["cosine"])
-            for r in pq_search_blocked(encoded, codebooks, q, k=5, shortlist=sl).collect()
-        }
-        assert set(fold) == set(blk)
-        assert all(fold[k][0] == blk[k][0] for k in fold)
-        assert all(abs(fold[k][1] - blk[k][1]) <= 2e-6 for k in fold)
+        if sl == 1 << 30:
+            assert got == brute
+        for qid in range(5):
+            ranked = sorted((rk, c, v) for (qq, v), (rk, c) in got.items() if qq == qid)
+            assert [rk for rk, _, _ in ranked] == [1, 2, 3, 4, 5]
+            assert all(a[1] >= b[1] for a, b in zip(ranked, ranked[1:]))
+            for _, c, v in ranked:
+                qv, cv = vecs[qid], vecs[v]
+                true = qv @ cv / (np.linalg.norm(qv) * np.linalg.norm(cv))
+                assert abs(c - true) <= 2e-6
 
 
 def test_char_entropy_arrow_twin_equals_hof_lane(spark):
@@ -264,20 +274,21 @@ def test_ivfpq_exact_mode_equals_brute_force(spark):
     assert got == brute
 
 
-def test_ivfpq_blocked_equals_fold_at_full_dials(spark):
-    """At nprobe=k and full shortlist both paths must return identical
-    rank sets (cosines to BLAS-vs-fold tolerance)."""
+def test_ivfpq_full_dials_match_bruteforce_ranks(spark):
+    """At nprobe = k_centroids and a full shortlist the IVF-PQ search
+    returns brute force's rank sets at the second test SF too."""
+    from tcdb_spark.plans import QUERIES
     from tcdb_spark.plans.queries_sim import _ivfpq_lane
 
-    fold = {
+    brute = {
         (r["q_id"], r["vec_id"]): r["rank_in_group"]
-        for r in _ivfpq_lane(spark, SF, 16, 1 << 30, blocked=False).collect()
+        for r in QUERIES["sim_topk_cosine"](spark, SF01).collect()
     }
-    blk = {
+    got = {
         (r["q_id"], r["vec_id"]): r["rank_in_group"]
-        for r in _ivfpq_lane(spark, SF, 16, 1 << 30, blocked=True).collect()
+        for r in _ivfpq_lane(spark, SF01, 16, 1 << 30).collect()
     }
-    assert fold == blk
+    assert got == brute
 
 
 def test_ivfpq_pruned_recall(spark):
@@ -296,13 +307,13 @@ def test_ivfpq_pruned_recall_sf01(spark):
 
 def test_ivfpq_persisted_index_prunes_partitions_and_matches(spark, tmp_path):
     """Warehouse-persisted IVF-PQ (partitioned by bucket, flattened
-    codebook side tables): search equals the in-memory blocked search,
+    codebook side tables): search equals the in-memory search,
     and the index scan carries a bucket partition filter — unprobed
     cells prune at the directory level before any row is read."""
     from tcdb_spark.operators.similarity import (
         ivfpq_build,
         ivfpq_persist,
-        ivfpq_search_blocked,
+        ivfpq_search,
         ivfpq_search_persisted,
     )
     from tcdb_spark.sources.warehouse import Warehouse
@@ -319,7 +330,7 @@ def test_ivfpq_persisted_index_prunes_partitions_and_matches(spark, tmp_path):
     rows = {(r.q_id, r.vec_id, r.rank_in_group) for r in got.collect()}
 
     encoded, cents, cbs = ivfpq_build(e, k_centroids=8, m=8, ksub=16, seed=42)
-    ref = ivfpq_search_blocked(encoded, cents, cbs, q, k=5, nprobe=3, shortlist=48)
+    ref = ivfpq_search(encoded, cents, cbs, q, k=5, nprobe=3, shortlist=48)
     assert rows == {(r.q_id, r.vec_id, r.rank_in_group) for r in ref.collect()}
 
     got.collect()

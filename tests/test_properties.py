@@ -551,10 +551,10 @@ def test_pq_exact_mode_matches_bruteforce_property(spark, vecs):
     """shortlist >= corpus must equal brute-force top-k on ANY corpus,
     whatever degenerate geometry hypothesis plants (duplicate vectors,
     scaled copies = cosine-1 ties -> vec_id tiebreak, near-orthogonal
-    sets) — for both the fold path and the blocked production path."""
+    sets)."""
     from pyspark.sql import functions as F2
 
-    from tcdb_spark.operators.similarity import pq_build, pq_search, pq_search_blocked
+    from tcdb_spark.operators.similarity import pq_build, pq_search
 
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
@@ -566,12 +566,11 @@ def test_pq_exact_mode_matches_bruteforce_property(spark, vecs):
         F2.col("embedding").cast("array<double>").alias("q_emb"),
     )
     expect = _brute_topk(vecs, k=3)
-    for search in (pq_search, pq_search_blocked):
-        got = {}
-        res = search(encoded, codebooks, q, k=3, shortlist=1 << 30).collect()
-        for r in sorted(res, key=lambda r: (r["q_id"], r["rank_in_group"])):
-            got.setdefault(r["q_id"], []).append(r["vec_id"])
-        assert got == expect, f"{search.__name__}: {got} != {expect}"
+    got = {}
+    res = pq_search(encoded, codebooks, q, k=3, shortlist=1 << 30).collect()
+    for r in sorted(res, key=lambda r: (r["q_id"], r["rank_in_group"])):
+        got.setdefault(r["q_id"], []).append(r["vec_id"])
+    assert got == expect, f"{got} != {expect}"
 
 
 @given(

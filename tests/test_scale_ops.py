@@ -74,14 +74,16 @@ def test_exact_mode_ann_equals_bruteforce(spark):
         assert got == want, f"{name} exact mode diverged from brute force"
 
 
-def test_fold_order_blocked_knn_equals_row_path(spark):
-    """Round 9: hard_negative_mining's scoring moved from the
-    row-expression fold (interpreted HOF per pair) to the block path in
-    ``fold_order`` mode.  The contract is BIT-equality of the full
-    output — same cosines (sequential-over-dims accumulation == the
-    aggregate(zip_with) left fold), same ranks, same tie-breaks, same
-    null-label drop semantics as the SQL ``<>`` filter."""
-    from tcdb_spark.operators.similarity import knn_join
+def test_knn_join_exact_mode_equals_fold_bruteforce(spark):
+    """hard_negative_mining's scoring at nprobe = k_centroids equals a
+    brute-force label-constrained top-k written as the Spark
+    ``aggregate(zip_with)`` fold over the full cross product — same
+    cosines (sequential-over-dims accumulation, stored candidate
+    norms), same ranks, same tie-breaks, same null-label drop
+    semantics as the SQL ``<>`` filter."""
+    from pyspark.sql.window import Window
+
+    from tcdb_spark.operators.similarity import _dot, _norm, knn_join
     from tcdb_spark.plans.catalog import load_tables
 
     emb = load_tables(spark, "/root/testdata/sf0.01", "embeddings")["embeddings"]
@@ -90,16 +92,24 @@ def test_fold_order_blocked_knn_equals_row_path(spark):
         F.col("embedding").cast("array<double>").alias("q_emb"),
         F.col("label").alias("q_label"),
     )
-    indexed, cents = ivf_build(emb, k_centroids=16, seed=42, extra_cols=["label"])
-    old = ivf_search(
-        indexed, cents, left, k=5, nprobe=16,
-        candidate_filter=F.col("label") != F.col("q_label"),
+    indexed, _ = ivf_build(emb, k_centroids=16, seed=42, extra_cols=["label"])
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
+    ref = (
+        indexed.crossJoin(left)
+        .where((F.col("label") != F.col("q_label")) & (F.col("vec_id") != F.col("q_id")))
+        .select(
+            "q_id", "vec_id",
+            (_dot(F.col("q_emb"), F.col("emb")) / (_norm(F.col("q_emb")) * F.col("nrm"))).alias("cos"),
+        )
+        .withColumn("rank_in_group", F.row_number().over(w).cast("int"))
+        .where(F.col("rank_in_group") <= 5)
+        .select("q_id", "vec_id", F.round("cos", 6).alias("cosine"), "rank_in_group")
     )
     new = knn_join(
         left, emb, k=5, k_centroids=16, nprobe=16,
-        mismatch_cols=("q_label", "label"), fold_order=True,
+        mismatch_cols=("q_label", "label"),
     )
-    o = sorted(map(tuple, old.select("q_id", "vec_id", "cosine", "rank_in_group").collect()))
+    o = sorted(map(tuple, ref.collect()))
     n = sorted(map(tuple, new.select("q_id", "vec_id", "cosine", "rank_in_group").collect()))
     assert o == n
 

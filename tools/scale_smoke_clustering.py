@@ -10,10 +10,10 @@ corpus scales where the testdata fixtures (500 vectors) say nothing.
 
 2. pq_build/pq_encode at the same 2M rows: encode throughput (rows/s)
    and the ADC search wall for a 5-query top-5 against the full corpus
-   with shortlist=64 — the pruned production shape (pq_search_blocked,
-   the Arrow-gather scorer; the column-expression fold path measured
-   77 s on the same corpus — ~80M interpreted lambda evaluations —
-   which is exactly why the blocked twin exists). Recall sanity: the
+   with shortlist=64 — the pruned production shape (pq_search, the
+   Arrow-gather scorer; a column-expression lookup fold measured 77 s
+   on the same corpus — ~80M interpreted lambda evaluations — which is
+   why the search gathers in numpy). Recall sanity: the
    planted same-cluster structure must put cosine > 0.9 at rank 1.
 
 The vectors are hash-derived (no RNG) so the smoke reproduces exactly:
@@ -89,7 +89,7 @@ def kmeans_smoke(spark, n: int) -> None:
 def pq_smoke(spark, n: int) -> None:
     from pyspark.sql import functions as F
 
-    from tcdb_spark.operators.similarity import pq_build, pq_search_blocked
+    from tcdb_spark.operators.similarity import pq_build, pq_search
 
     emb = synth(spark, n).persist()
     emb.count()
@@ -103,7 +103,7 @@ def pq_smoke(spark, n: int) -> None:
         F.col("embedding").cast("array<double>").alias("q_emb"),
     )
     t0 = time.monotonic()
-    res = pq_search_blocked(encoded, codebooks, q, k=5, shortlist=64)
+    res = pq_search(encoded, codebooks, q, k=5, shortlist=64)
     rows = res.collect()
     t_search = time.monotonic() - t0
     # query vectors ARE corpus rows: self-match is excluded, but the
@@ -123,7 +123,7 @@ def pq_smoke(spark, n: int) -> None:
 def ivfpq_smoke(spark, n: int) -> None:
     from pyspark.sql import functions as F
 
-    from tcdb_spark.operators.similarity import ivfpq_build, ivfpq_search_blocked
+    from tcdb_spark.operators.similarity import ivfpq_build, ivfpq_search
 
     emb = synth(spark, n).persist()
     emb.count()
@@ -137,7 +137,7 @@ def ivfpq_smoke(spark, n: int) -> None:
         F.col("embedding").cast("array<double>").alias("q_emb"),
     )
     t0 = time.monotonic()
-    rows = ivfpq_search_blocked(
+    rows = ivfpq_search(
         encoded, centroids, codebooks, q, k=5, nprobe=4, shortlist=64
     ).collect()
     t_search = time.monotonic() - t0
