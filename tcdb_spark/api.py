@@ -66,6 +66,11 @@ class Engine:
         run_incremental(self.spark, landing_dir, self.warehouse, now=now)
 
     def maintain(self, now=None) -> dict[str, int]:
+        """The maintenance cron step: archive storms idle for more than a
+        day, then delete invests idle for more than 30 days with their
+        observations and tracks (jobs/maintenance.py). Each step commits
+        only when it has rows to change. Returns {'archived': n,
+        'removed_storms': n}."""
         from tcdb_spark.jobs.maintenance import remove_old_invests, update_active_systems
 
         archived = update_active_systems(

@@ -17,8 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcdb_spark.dims import MODEL_TECHS, data_sources_df, models_df, regions_df
-from tcdb_spark.operators.merge import merge
+from tcdb_spark.operators.merge import merge, merge_counts
 from tcdb_spark.schemas import FORECASTS_SCHEMA, STEPS_SCHEMA, TRACKS_SCHEMA
+from tcdb_spark.session import persisted
 from tcdb_spark.sources.warehouse import Warehouse
 
 
@@ -40,6 +41,9 @@ def run_adeck_job(
     - storm inference: (basin, number) + init inside the storm's activity
       window, the set-based form of inferStormFromAdeck
       (tcdb/models/database.py:26-66).
+
+    Returns {'forecasts': n, 'tracks': n, 'steps': n} row counts after
+    merge, counted by the MERGE writes themselves.
     """
     regions = regions_df(spark)
     models = models_df(spark)
@@ -97,51 +101,45 @@ def run_adeck_job(
         F.xxhash64(F.lit("track"), F.col("forecast_id"), F.col("storm_id"), F.col("ensemble_number")),
     )
 
-    forecasts = df.select(
-        "forecast_id", "data_source_id", "model_id", "region_id",
-        F.col("DATETIME").alias("datetime_utc"),
-    ).dropDuplicates(["forecast_id"])
+    # the keyed batch feeds all three MERGEs: persisted for the job, so
+    # the deck text is parsed and joined to storms once, not per table
+    with persisted(df) as keyed:
+        forecasts = keyed.select(
+            "forecast_id", "data_source_id", "model_id", "region_id",
+            F.col("DATETIME").alias("datetime_utc"),
+        ).dropDuplicates(["forecast_id"])
 
-    tracks = df.select(
-        "track_id", "storm_id", "forecast_id",
-        F.col("ensemble_number").cast("int").alias("ensemble_number"),
-    ).dropDuplicates(["track_id"])
+        tracks = keyed.select(
+            "track_id", "storm_id", "forecast_id",
+            F.col("ensemble_number").cast("int").alias("ensemble_number"),
+        ).dropDuplicates(["track_id"])
 
-    # one step row per (track, TAU): first RAD row carries position
-    # (stepFromDataFrame, tcdb/etl/atcf.py:388-415)
-    first_ord = F.struct(F.col("RAD").try_cast("int"))
-    steps = df.groupBy("track_id", F.col("TAU").cast("int").alias("hour")).agg(
-        F.min_by("LAT", first_ord).alias("latitude"),
-        F.min_by("LON", first_ord).alias("longitude"),
-        F.min_by("VMAX", first_ord).alias("intensity_kts"),
-        F.min_by("MSLP", first_ord).alias("mslp_mb"),
-    )
-    steps = steps.withColumn(
-        "step_id", F.xxhash64(F.lit("step"), F.col("track_id"), F.col("hour"))
-    )
+        # one step row per (track, TAU): first RAD row carries position
+        # (stepFromDataFrame, tcdb/etl/atcf.py:388-415)
+        first_ord = F.struct(F.col("RAD").try_cast("int"))
+        steps = keyed.groupBy("track_id", F.col("TAU").cast("int").alias("hour")).agg(
+            F.min_by("LAT", first_ord).alias("latitude"),
+            F.min_by("LON", first_ord).alias("longitude"),
+            F.min_by("VMAX", first_ord).alias("intensity_kts"),
+            F.min_by("MSLP", first_ord).alias("mslp_mb"),
+        )
+        steps = steps.withColumn(
+            "step_id", F.xxhash64(F.lit("step"), F.col("track_id"), F.col("hour"))
+        )
 
-    # one atomic commit across the 3-level hierarchy — the reference's
-    # per-file session transaction (tcdb/etl/atcf_forecasts.py:51,136):
-    # a crash mid-job leaves either all three tables advanced or none,
-    # never a forecast without its tracks/steps
-    with warehouse.transaction(["forecasts", "tracks", "steps"]) as txn:
-        txn.write(
-            "forecasts",
-            merge(warehouse.read("forecasts", FORECASTS_SCHEMA), forecasts,
-                  keys=["forecast_id"], run_id=run_id),
-        )
-        txn.write(
-            "tracks",
-            merge(warehouse.read("tracks", TRACKS_SCHEMA), tracks,
-                  keys=["track_id"], run_id=run_id),
-        )
-        txn.write(
-            "steps",
-            merge(warehouse.read("steps", STEPS_SCHEMA), steps,
-                  keys=["track_id", "hour"], run_id=run_id),
-        )
-    return {
-        "forecasts": warehouse.read("forecasts").count(),
-        "tracks": warehouse.read("tracks").count(),
-        "steps": warehouse.read("steps").count(),
-    }
+        # one atomic commit across the 3-level hierarchy — the reference's
+        # per-file session transaction (tcdb/etl/atcf_forecasts.py:51,136):
+        # a crash mid-job leaves either all three tables advanced or none,
+        # never a forecast without its tracks/steps
+        with warehouse.transaction(["forecasts", "tracks", "steps"]) as txn:
+            merged = {
+                "forecasts": merge(warehouse.read("forecasts", FORECASTS_SCHEMA), forecasts,
+                                   keys=["forecast_id"], run_id=run_id),
+                "tracks": merge(warehouse.read("tracks", TRACKS_SCHEMA), tracks,
+                                keys=["track_id"], run_id=run_id),
+                "steps": merge(warehouse.read("steps", STEPS_SCHEMA), steps,
+                               keys=["track_id", "hour"], run_id=run_id),
+            }
+            for table, frame in merged.items():
+                txn.write(table, frame)
+    return {table: merge_counts(frame)["rows"] for table, frame in merged.items()}

@@ -3,7 +3,8 @@
 
 Spark redesign of the reference's ensemble load path
 (tcdb/etl/syntracks.py: toSyntrackObjects -> parseSystemTracks ->
-ensMean -> toStepDict loops): one DataFrame pipeline, two MERGEs.
+ensMean -> toStepDict loops): one DataFrame pipeline over the matched
+members (decoded and assigned once), two MERGEs.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcdb_spark.operators.aggregates import ensemble_mean
-from tcdb_spark.operators.merge import merge
+from tcdb_spark.operators.merge import merge, merge_counts
 from tcdb_spark.operators.syntracks import (
     TRACK_KEYS,
     assign_tracks_to_invest,
@@ -20,6 +21,7 @@ from tcdb_spark.operators.syntracks import (
     syntrack_steps,
 )
 from tcdb_spark.schemas import STEPS_SCHEMA, TRACKS_SCHEMA
+from tcdb_spark.session import persisted
 from tcdb_spark.sources.warehouse import Warehouse
 
 ENS_MEAN_LABEL = 9000
@@ -38,6 +40,9 @@ def run_syntrack_job(
 
     ``ensemble``: SYNTRACK_SCHEMA long format. ``invests``:
     (model, init, annual_id, name, lat, lon, valid).
+
+    Returns {'tracks': n, 'steps': n} row counts after merge, counted by
+    the MERGE writes themselves.
     """
     tracks = drop_empty_tracks(ensemble)
     assigned = assign_tracks_to_invest(tracks, invests)
@@ -68,33 +73,33 @@ def run_syntrack_job(
             .drop("__aid", "__nm")
         )
 
-    matched = assigned.where(F.col("annual_id") > 0)
     track_id = F.xxhash64(F.lit("syntrack"), F.col("model"), F.col("init"), F.col("ensemble"))
-    track_rows = (
-        matched.select(
-            track_id.alias("track_id"),
-            F.xxhash64(F.lit("ens-storm"), F.col("storm_name"), F.col("annual_id")).alias("storm_id"),
-            F.xxhash64(F.lit("ens-forecast"), F.col("model"), F.col("init")).alias("forecast_id"),
-            F.col("ensemble").cast("int").alias("ensemble_number"),
+    # tracks and steps both derive from the matched members: persisted for
+    # the job, so the ensemble source (a .mat decode) runs once
+    with persisted(assigned.where(F.col("annual_id") > 0)) as matched:
+        track_rows = (
+            matched.select(
+                track_id.alias("track_id"),
+                F.xxhash64(F.lit("ens-storm"), F.col("storm_name"), F.col("annual_id")).alias("storm_id"),
+                F.xxhash64(F.lit("ens-forecast"), F.col("model"), F.col("init")).alias("forecast_id"),
+                F.col("ensemble").cast("int").alias("ensemble_number"),
+            )
+            .dropDuplicates(["track_id"])
         )
-        .dropDuplicates(["track_id"])
-    )
-    step_rows = syntrack_steps(matched).dropDuplicates(["track_id", "hour"])
+        step_rows = syntrack_steps(matched).dropDuplicates(["track_id", "hour"])
 
-    warehouse.write(
-        "tracks",
-        merge(warehouse.read("tracks", TRACKS_SCHEMA), track_rows, keys=["track_id"], run_id=run_id),
-    )
-    warehouse.write(
-        "steps",
-        merge(
+        merged_tracks = merge(
+            warehouse.read("tracks", TRACKS_SCHEMA), track_rows, keys=["track_id"], run_id=run_id
+        )
+        warehouse.write("tracks", merged_tracks)
+        merged_steps = merge(
             warehouse.read("steps", STEPS_SCHEMA),
             step_rows.withColumn("step_id", F.xxhash64(F.lit("step"), F.col("track_id"), F.col("hour"))),
             keys=["track_id", "hour"],
             run_id=run_id,
-        ),
-    )
+        )
+        warehouse.write("steps", merged_steps)
     return {
-        "tracks": warehouse.read("tracks").count(),
-        "steps": warehouse.read("steps").count(),
+        "tracks": merge_counts(merged_tracks)["rows"],
+        "steps": merge_counts(merged_steps)["rows"],
     }

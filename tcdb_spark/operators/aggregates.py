@@ -76,24 +76,6 @@ def ensemble_mean(
     return df.unionByName(mean_rows, allowMissingColumns=True)
 
 
-def next_annual_id(storms: DataFrame, incoming: DataFrame, partition: list[str]) -> DataFrame:
-    """Assign ``annual_id = max(existing per (season, region)) + row_number``
-    within the batch — the parallel-safe form of the reference's
-    ``max(annual_id)+1`` per-row read-increment
-    (tcdb/etl/process_storms.py:220-235), deterministic per batch commit.
-    """
-    maxes = storms.groupBy(*partition).agg(F.max("annual_id").alias("__max_aid"))
-    w = W.partitionBy(*partition).orderBy("start_date", "nhc_id")
-    return (
-        incoming.join(F.broadcast(maxes), on=partition, how="left")
-        .withColumn(
-            "annual_id",
-            (F.coalesce(F.col("__max_aid"), F.lit(0)) + F.row_number().over(w)).cast("int"),
-        )
-        .drop("__max_aid")
-    )
-
-
 def child_counts(parent: DataFrame, child: DataFrame, key: str, out: str) -> DataFrame:
     """num_observations / num_tracks / numTrackSteps convenience counts
     (tcdb/models/storms.py:66-68, tracks.py:45-47, forecasts.py:50-52)."""

@@ -13,10 +13,11 @@ order-dependent logic (tcdb/etl/process_storms.py:24-168):
 - ``namedStormSearch`` (:128-168): an incoming *invest* conversely looks
   for an existing named storm (nhc_number <= 50) it duplicates.
 
-Here resolution is one deterministic set-based plan per direction:
-equi-join on region + 24 h banded start-date + 100 nm threshold + window
-argmin (distance, then storm key as tiebreak). No ordering effects: ties
-resolve identically regardless of arrival order.
+Here resolution is one deterministic set-based plan: one equi-join of
+the incoming batch against the catalog on basin + 24 h start-date bucket
+(+/-1 bucket, so a hash join, not a BNLJ), one rule priority per pair,
+and one window argmin (priority, distance, start delta, storm key). No
+ordering effects: ties resolve identically regardless of arrival order.
 """
 
 from __future__ import annotations
@@ -36,71 +37,20 @@ MATCH_NM = 100.0  # distance threshold (tcdb/etl/process_storms.py:56)
 DRIFT_H = 24.0    # start-date drift window (tcdb/etl/process_storms.py:104-117)
 
 
-def _nearest_in_band(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-    max_nm: float = MATCH_NM,
-    drift_hours: float = DRIFT_H,
-) -> DataFrame:
-    """Candidates = same basin, |start_date delta| <= drift; score by
-    haversine(start positions); keep nearest per left row under the
-    threshold. Returns (left_key, right_key, distance_nm, start_delta_s).
-
-    Scale: both sides are storm catalogs (small dims) — the join is
-    broadcast-able; the band is bucketized by ``interval_join`` semantics
-    inline (floor to drift-sized buckets, +/-1 bucket) so Catalyst plans a
-    hash join, not a BNLJ.
-    """
-    tol_s = int(drift_hours * 3600)
-    l = left.select(
-        F.col(left_key),
-        F.col("basin").alias("__basin"),
-        F.col("start_date").alias("__lts"),
-        F.col("start_lat").alias("__llat"),
-        F.col("start_lon").alias("__llon"),
-    ).withColumn("__lb", F.floor(F.unix_timestamp("__lts") / tol_s))
-    r = right.select(
-        F.col(right_key),
-        F.col("basin").alias("__basin"),
-        F.col("start_date").alias("__rts"),
-        F.col("start_lat").alias("__rlat"),
-        F.col("start_lon").alias("__rlon"),
-    ).withColumn("__rb", F.floor(F.unix_timestamp("__rts") / tol_s))
-    r = r.withColumn("__rb", F.explode(F.array(F.col("__rb") - 1, F.col("__rb"), F.col("__rb") + 1)))
-
-    j = (
-        l.join(r.withColumnRenamed("__basin", "__rbasin"),
-               (F.col("__basin") == F.col("__rbasin")) & (F.col("__lb") == F.col("__rb")))
-        .where(F.abs(F.unix_timestamp("__lts") - F.unix_timestamp("__rts")) <= tol_s)
-        .withColumn("distance_nm", haversine("__llat", "__llon", "__rlat", "__rlon", "nm"))
-        .where(F.col("distance_nm") <= max_nm)
-        .withColumn("start_delta_s", F.abs(F.unix_timestamp("__lts") - F.unix_timestamp("__rts")))
-    )
-    w = W.partitionBy(left_key).orderBy(
-        F.col("distance_nm").asc(), F.col("start_delta_s").asc(), F.col(right_key).asc()
-    )
-    return (
-        j.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(left_key, right_key, "distance_nm", "start_delta_s")
-    )
-
-
 def resolve_storms(incoming: DataFrame, existing: DataFrame) -> DataFrame:
     """Assign each incoming storm row the natural key it should MERGE on.
 
     Input schemas need: nhc_id, nhc_number, basin, season, start_date,
     end_date, start_lat, start_lon (plus payload columns, carried through).
-    ``existing`` additionally needs storm_id.
+    ``existing`` additionally needs storm_id. ``basin`` is the two-letter
+    prefix of ``nhc_id`` on both sides.
 
     Resolution order (mirrors processStorms, tcdb/etl/process_storms.py:
     190-243, made set-based):
       1. exact nhc_id + start_date within 24 h  -> same storm;
       2. incoming named (<= NAMED_MAX) upgrades nearest existing invest
-         (>= INVEST_MIN) within 100 nm / 24 h    -> invest's storm_id,
-         incoming identity (name, nhc_id) wins;
+         (>= UPGRADE_SEARCH_MIN) within 100 nm / 24 h -> invest's
+         storm_id, incoming identity (name, nhc_id) wins;
       3. incoming invest (>= INVEST_MIN) matching an existing named storm
          has already transitioned -> labeled ``duplicate_invest`` so the
          caller DROPS it (the reference makes no updates to transitioned
@@ -108,77 +58,64 @@ def resolve_storms(incoming: DataFrame, existing: DataFrame) -> DataFrame:
          tcdb/etl/process_storms.py:95-98,212-214);
       4. otherwise                               -> brand-new storm.
 
+    Every rule needs the same basin and a start-date delta of at most
+    24 h, so all three share one band join; each pair gets the priority
+    of the first rule it satisfies, and the best pair per incoming
+    nhc_id is the least (priority, distance (0 for an exact match),
+    start delta, storm_id) — the order each rule's own argmin applies.
+
     Output: incoming columns + ``matched_storm_id`` (null -> insert) +
     ``match_rule`` in {exact, upgrade, duplicate_invest, new}.
     """
-    inc = incoming.alias("inc")
-    ex = existing.alias("ex")
-
-    # Rule 1: exact nhc_id, banded start date; multiple in-band existing
-    # rows resolve deterministically by (start-date delta, storm_id) — the
-    # same tiebreak discipline as _nearest_in_band, so ties cannot flap
-    # with arrival order
-    exact_w = W.partitionBy("nhc_id").orderBy(
-        F.col("__delta_s").asc(), F.col("matched_storm_id").asc()
+    tol_s = int(DRIFT_H * 3600)
+    inc = incoming.select(
+        "nhc_id",
+        F.col("nhc_number").alias("__inum"),
+        "basin",
+        F.unix_timestamp("start_date").alias("__its"),
+        F.col("start_lat").alias("__ilat"),
+        F.col("start_lon").alias("__ilon"),
+    ).withColumn("__bucket", F.floor(F.col("__its") / tol_s))
+    ex = existing.select(
+        F.col("storm_id").alias("matched_storm_id"),
+        F.col("nhc_id").alias("__enhc"),
+        F.col("nhc_number").alias("__enum"),
+        "basin",
+        F.unix_timestamp("start_date").alias("__ets"),
+        F.col("start_lat").alias("__elat"),
+        F.col("start_lon").alias("__elon"),
     )
-    exact = (
-        inc.join(ex, on=[F.col("inc.nhc_id") == F.col("ex.nhc_id")], how="inner")
-        .where(
-            F.abs(
-                F.unix_timestamp("inc.start_date") - F.unix_timestamp("ex.start_date")
-            ) <= int(DRIFT_H * 3600)
-        )
-        .select(
-            F.col("inc.nhc_id").alias("nhc_id"),
-            F.col("ex.storm_id").alias("matched_storm_id"),
-            F.abs(
-                F.unix_timestamp("inc.start_date") - F.unix_timestamp("ex.start_date")
-            ).alias("__delta_s"),
-        )
-        .withColumn("__rn", F.row_number().over(exact_w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__delta_s")
+    b = F.floor(F.col("__ets") / tol_s)
+    ex = ex.withColumn("__bucket", F.explode(F.array(b - 1, b, b + 1)))
+
+    pairs = (
+        inc.join(ex, on=["basin", "__bucket"])
+        .withColumn("__dt", F.abs(F.col("__its") - F.col("__ets")))
+        .where(F.col("__dt") <= tol_s)
+        .withColumn("__dist", haversine("__ilat", "__ilon", "__elat", "__elon", "nm"))
     )
-
-    # Rule 2: named incoming <- existing invest ----------------------------
-    named_inc = incoming.where(F.col("nhc_number") <= NAMED_MAX)
-    invests_ex = existing.where(F.col("nhc_number") >= UPGRADE_SEARCH_MIN)
-    upgrades = _nearest_in_band(
-        named_inc.withColumnRenamed("nhc_id", "inc_nhc_id"),
-        invests_ex.select("storm_id", "basin", "start_date", "start_lat", "start_lon"),
-        "inc_nhc_id",
-        "storm_id",
-    ).select(F.col("inc_nhc_id").alias("nhc_id"), F.col("storm_id").alias("matched_storm_id"))
-
-    # Rule 3: invest incoming -> existing named ----------------------------
-    invest_inc = incoming.where(F.col("nhc_number") >= INVEST_MIN)
-    named_ex = existing.where(F.col("nhc_number") <= NAMED_MAX)
-    dup_invest = _nearest_in_band(
-        invest_inc.withColumnRenamed("nhc_id", "inc_nhc_id"),
-        named_ex.select("storm_id", "basin", "start_date", "start_lat", "start_lon"),
-        "inc_nhc_id",
-        "storm_id",
-    ).select(F.col("inc_nhc_id").alias("nhc_id"), F.col("storm_id").alias("matched_storm_id"))
-
-    exact = exact.withColumn("match_rule", F.lit("exact"))
-    upgrades = upgrades.withColumn("match_rule", F.lit("upgrade"))
-    dup_invest = dup_invest.withColumn("match_rule", F.lit("duplicate_invest"))
-
-    # precedence: exact > upgrade > duplicate_invest (one match per nhc_id)
-    ranked = (
-        exact.unionByName(upgrades).unionByName(dup_invest)
-        .withColumn(
-            "__prio",
-            F.when(F.col("match_rule") == "exact", 0)
-            .when(F.col("match_rule") == "upgrade", 1)
-            .otherwise(2),
-        )
+    near = F.col("__dist") <= MATCH_NM
+    exact = F.col("nhc_id") == F.col("__enhc")
+    upgrade = (F.col("__inum") <= NAMED_MAX) & (F.col("__enum") >= UPGRADE_SEARCH_MIN) & near
+    dup = (F.col("__inum") >= INVEST_MIN) & (F.col("__enum") <= NAMED_MAX) & near
+    pairs = pairs.withColumn(
+        "__prio", F.when(exact, 0).when(upgrade, 1).when(dup, 2)
+    ).where(F.col("__prio").isNotNull())
+    w = W.partitionBy("nhc_id").orderBy(
+        "__prio",
+        F.when(F.col("__prio") == 0, F.lit(0.0)).otherwise(F.col("__dist")),
+        "__dt",
+        "matched_storm_id",
     )
-    w = W.partitionBy("nhc_id").orderBy("__prio", "matched_storm_id")
+    rule = F.when(F.col("__prio") == 0, "exact").when(F.col("__prio") == 1, "upgrade")
     best = (
-        ranked.withColumn("__rn", F.row_number().over(w))
+        pairs.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .select("nhc_id", "matched_storm_id", "match_rule")
+        .select(
+            "nhc_id",
+            "matched_storm_id",
+            rule.otherwise("duplicate_invest").alias("match_rule"),
+        )
     )
 
     out = incoming.join(F.broadcast(best), on="nhc_id", how="left")

@@ -12,6 +12,11 @@ tcdb/etl/process_storms.py:190-243). Here MERGE is one set-based plan:
              -> right-only          => insert
              -> left-only           => keep
 
+The output frame also counts its inserted / updated / unchanged rows
+while the write runs it (:func:`merge_counts`), which is how the jobs
+report table sizes and how the warehouse skips publishing a MERGE that
+changed nothing.
+
 Idempotent under replay (same input twice -> fixed point), which is what
 the reference gets from unique indexes + one_or_none gates. On a real
 lakehouse this maps 1:1 onto ``MERGE INTO`` (Delta/Iceberg — jars not in
@@ -23,10 +28,13 @@ null-safe column comparison, no per-row Python.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 from pyspark.sql.window import Window as W
+
+# attribute of a merge() frame holding its Observation (see merge_counts)
+_OBSERVATION = "_merge_observation"
 
 
 def changed_predicate(left_prefix: str, right_prefix: str, cols: list[str]) -> Column:
@@ -176,7 +184,35 @@ def merge(
         out_cols.append(
             F.when(take_incoming, ts).otherwise(F.col("cur.last_update")).alias("last_update")
         )
-    return joined.select(*out_cols)
+    # the action that executes this frame (normally the warehouse write)
+    # fills the counts, so reading them costs no extra job; Observation
+    # does not take streaming frames
+    obs = None if joined.isStreaming else Observation()
+    if obs is not None:
+        joined = joined.observe(
+            obs,
+            F.count_if(take_incoming & ~cur_exists).alias("inserted"),
+            F.count_if(take_incoming & cur_exists).alias("updated"),
+            F.count_if(~take_incoming).alias("unchanged"),
+        )
+    out = joined.select(*out_cols)
+    out.__dict__[_OBSERVATION] = obs
+    return out
+
+
+def merge_counts(merged: DataFrame) -> dict[str, int] | None:
+    """Row counts of a :func:`merge` frame, filled by the first action
+    that ran it (normally the warehouse write): ``inserted``, ``updated``
+    (matched and changed), ``unchanged`` (every other output row) and
+    ``rows`` (their sum, the post-merge table size). None for a frame
+    :func:`merge` did not return itself (any transformation of it loses
+    the counts). Blocks until that first action has finished."""
+    obs = merged.__dict__.get(_OBSERVATION)
+    if obs is None:
+        return None
+    counts = {k: int(v) for k, v in obs.get.items()}
+    counts["rows"] = counts["inserted"] + counts["updated"] + counts["unchanged"]
+    return counts
 
 
 def delete_where(table: DataFrame, predicate: Column) -> DataFrame:

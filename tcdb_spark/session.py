@@ -7,9 +7,11 @@ scaled to ~2-3x total cores and AQE left on to coalesce/re-plan at runtime.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -61,6 +63,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def persisted(df: DataFrame):
+    """Persist ``df`` for the with-block and release it on the way out,
+    error or not, so a job's cached frames never outlive the job. A frame
+    whose plan is already cached (by the caller) is used as is and stays
+    cached."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist()
 
 
 def sf_dir(default: str = "/root/testdata/sf0.1") -> str:

@@ -63,6 +63,16 @@ def bucket_id_expr(bucket_cols: list[str], n_buckets: int):
     return F.pmod(F.hash(*[F.col(c) for c in bucket_cols]), F.lit(n_buckets))
 
 
+def _has_changes(df: DataFrame) -> bool:
+    """False only for a merge() frame, already written, that inserted and
+    updated nothing (merge never deletes); any other frame counts as a
+    change."""
+    from tcdb_spark.operators.merge import merge_counts
+
+    counts = merge_counts(df)
+    return counts is None or counts["inserted"] + counts["updated"] > 0
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -418,7 +428,8 @@ class Warehouse:
         matches). Runs under the per-table writer lock (ConcurrentWrite-
         Error on contention). Returns stats: {'version',
         'touched_buckets', 'rewritten_files', 'carried_files',
-        'n_buckets'}.
+        'n_buckets', 'rows'} (rows: the new version's row count, read
+        without scanning it).
         """
         with self._write_lock(table):
             return self._merge_scoped_locked(table, incoming, keys, **merge_kwargs)
@@ -430,7 +441,10 @@ class Warehouse:
         keys: list[str],
         **merge_kwargs,
     ) -> dict:
+        import pyarrow.parquet as pq
+
         from tcdb_spark.operators.merge import merge as _merge
+        from tcdb_spark.operators.merge import merge_counts
 
         v_old = self.current_version(table)
         if v_old is None or not os.path.exists(self._bucket_marker(table, v_old)):
@@ -485,15 +499,15 @@ class Warehouse:
             else:
                 current_touched = self.spark.createDataFrame([], schema)
 
-            merged = _merge(current_touched, incoming, keys, **merge_kwargs)
+            upsert = _merge(current_touched, incoming, keys, **merge_kwargs)
             # parquet resolves columns by name, but keep the table order so
             # every version shares one visible schema; with schema_evolution
             # the evolved columns are appended AFTER the existing order, and
             # carried files simply lack them (parquet schema-on-read fills
             # NULL — the same mechanics a lakehouse mergeSchema relies on)
-            evolved = [c for c in merged.columns if c not in {f.name for f in schema.fields}]
+            evolved = [c for c in upsert.columns if c not in {f.name for f in schema.fields}]
             order = [f.name for f in schema.fields] + evolved
-            merged = merged.select(*order)
+            merged = upsert.select(*order)
             if evolved:
                 spec = dict(spec)
                 spec["schema"] = merged.schema.jsonValue()
@@ -513,12 +527,18 @@ class Warehouse:
         with open(self._bucket_marker(table, v_new), "w") as f:
             json.dump(spec, f)
         self._publish({table: v_new})
+        # rows of the new version: the merged buckets as the write counted
+        # them, the carried files from their parquet footers
+        carried_rows = sum(
+            pq.ParquetFile(os.path.join(new_path, f)).metadata.num_rows for f in carried_files
+        )
         return {
             "version": v_new,
             "touched_buckets": sorted(touched),
             "rewritten_files": len(touched_files),
             "carried_files": len(carried_files),
             "n_buckets": n_buckets,
+            "rows": merge_counts(upsert)["rows"] + carried_rows,
         }
 
     def compact(
@@ -1044,14 +1064,22 @@ class Warehouse:
         commit a compare-and-swap. ``stats_cols`` auto-collects per-file
         min/max stats on those columns BEFORE the pointer moves, so every
         published version is immediately servable by ``read_skipping``
-        (the lakehouse stats-at-commit convention)."""
+        (the lakehouse stats-at-commit convention).
+
+        A :func:`~tcdb_spark.operators.merge.merge` frame that inserted
+        and updated nothing over an existing table publishes nothing: the
+        written files are removed and the current version is returned."""
         with self._write_lock(table, expect_version):
-            v = (self.current_version(table) or 0) + 1
+            base = self.current_version(table)
+            v = (base or 0) + 1
             path = os.path.join(self._dir(table), f"v={v}")
             w = df.write.mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(path)
+            if base is not None and not _has_changes(df):
+                shutil.rmtree(path, ignore_errors=True)
+                return base
             if stats_cols:
                 self.collect_stats(table, stats_cols, version=v)
             self._publish({table: v})
@@ -1069,10 +1097,13 @@ class WarehouseTransaction:
     deadlock); ``write`` stages data under the next ``v=`` directory of
     each table WITHOUT moving anything a reader resolves; ``__exit__``
     publishes all staged versions with ONE snapshot swap — readers see
-    every table move together or none.  On error (or a crash), staged
-    directories are orphans below unpointed versions: invisible to
-    readers, removed by the explicit rollback path when the process
-    survives, reclaimed by the next write's overwrite otherwise.
+    every table move together or none.  A table whose staged writes
+    were all MERGEs that changed nothing keeps its version: its staged
+    directories are removed at ``__exit__``, not at the write, since a
+    later write in the same transaction may read them.  On error (or a
+    crash), staged directories are orphans below unpointed versions:
+    invisible to readers, removed by the explicit rollback path when the
+    process survives, reclaimed by the next write's overwrite otherwise.
     """
 
     def __init__(self, wh: Warehouse, tables: list[str]):
@@ -1080,6 +1111,8 @@ class WarehouseTransaction:
         self._tables = sorted(set(tables))
         self._stack: contextlib.ExitStack | None = None
         self._staged: dict[str, int] = {}
+        self._base: dict[str, int | None] = {}
+        self._changed: set[str] = set()
 
     def __enter__(self) -> "WarehouseTransaction":
         self._stack = contextlib.ExitStack()
@@ -1106,13 +1139,16 @@ class WarehouseTransaction:
                 f"table {table!r} is not part of this transaction "
                 f"(declared: {self._tables})"
             )
-        base = self._staged.get(table, self._wh.current_version(table) or 0)
-        v = base + 1
+        if table not in self._base:
+            self._base[table] = self._wh.current_version(table)
+        v = self._staged.get(table, self._base[table] or 0) + 1
         path = os.path.join(self._wh._dir(table), f"v={v}")
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(path)
+        if self._base[table] is None or _has_changes(df):
+            self._changed.add(table)
         if stats_cols:
             self._wh.collect_stats(table, stats_cols, version=v)
         self._staged[table] = v
@@ -1131,18 +1167,22 @@ class WarehouseTransaction:
 
     def __exit__(self, exc_type, exc, tb) -> bool:
         try:
-            if exc_type is None and self._staged:
-                self._wh._publish(dict(self._staged))  # the commit point
-            elif exc_type is not None:
-                # rollback: staged version dirs were never visible; remove
-                # them so versions() and vacuum never meet half a txn
-                for table, v in self._staged.items():
+            publish = {t: v for t, v in self._staged.items() if t in self._changed}
+            if exc_type is None and publish:
+                self._wh._publish(publish)  # the commit point
+            # rollback (on error) and no-op tables: staged version dirs
+            # were never visible; remove them so versions() and vacuum
+            # never meet half a txn
+            for table, v in self._staged.items():
+                if exc_type is None and table in publish:
+                    continue
+                for sv in range((self._base[table] or 0) + 1, v + 1):
                     shutil.rmtree(
-                        os.path.join(self._wh._dir(table), f"v={v}"),
+                        os.path.join(self._wh._dir(table), f"v={sv}"),
                         ignore_errors=True,
                     )
                     with contextlib.suppress(FileNotFoundError):
-                        os.remove(self._wh._stats_path(table, v))
+                        os.remove(self._wh._stats_path(table, sv))
         finally:
             if self._stack is not None:
                 self._stack.close()

@@ -272,3 +272,44 @@ def test_transitioned_invest_is_dropped_from_staging(spark):
     ids = [r["nhc_id"] for r in staged.collect()]
     assert "AL952022" not in ids, "transitioned invest must be dropped, not merged"
     assert "EP902022" in ids
+
+
+def test_stage_storms_numbers_new_storms_after_catalog_max(spark):
+    """New storms take max(annual_id) + 1, 2, ... per (season, region) in
+    (start_date, nhc_id) order, a fresh (season, region) starts at 1, and
+    a matched storm keeps its own annual_id
+    (tcdb/etl/process_storms.py:220-235)."""
+    from tcdb_spark.dims import regions_df
+    from tcdb_spark.jobs.bdeck import stage_storms
+
+    regions = regions_df(spark)
+    al = regions.where(F.col("short_name") == "AL").first()["region_id"]
+    existing = spark.createDataFrame(
+        [
+            (1, 3, al, 5, "AL052022", 2022, dt.datetime(2022, 8, 1),
+             dt.datetime(2022, 8, 5), "Archive", "Erin", 30.0, -40.0),
+            (2, 7, al, 6, "AL062022", 2022, dt.datetime(2022, 8, 10),
+             dt.datetime(2022, 8, 15), "Archive", "Fiona", 35.0, -50.0),
+        ],
+        "storm_id long, annual_id int, region_id long, nhc_number int, nhc_id string, "
+        "season int, start_date timestamp, end_date timestamp, status string, "
+        "name string, start_lat double, start_lon double",
+    )
+    incoming = spark.createDataFrame(
+        [
+            ("AL012022", 1, "AL", 2022, dt.datetime(2022, 6, 1), dt.datetime(2022, 6, 3), "A", 10.0, -20.0),
+            ("AL022022", 2, "AL", 2022, dt.datetime(2022, 7, 1), dt.datetime(2022, 7, 3), "B", 12.0, -22.0),
+            ("EP012023", 1, "EP", 2023, dt.datetime(2023, 6, 1), dt.datetime(2023, 6, 3), "C", 14.0, -100.0),
+            # the existing AL05 again: matched, keeps annual_id 3
+            ("AL052022", 5, "AL", 2022, dt.datetime(2022, 8, 1), dt.datetime(2022, 8, 6), "Erin", 30.0, -40.0),
+        ],
+        "nhc_id string, nhc_number int, basin string, season int, "
+        "start_date timestamp, end_date timestamp, name string, "
+        "start_lat double, start_lon double",
+    )
+    out = {r["nhc_id"]: r for r in stage_storms(incoming, existing, regions, now=NOW()).collect()}
+    # existing max 7 -> 8, 9; fresh partition starts at 1
+    assert {k: r["annual_id"] for k, r in out.items()} == {
+        "AL012022": 8, "AL022022": 9, "EP012023": 1, "AL052022": 3,
+    }
+    assert out["AL052022"]["storm_id"] == 1

@@ -6,11 +6,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from tcdb_spark.operators.aggregates import (
-    deterministic_mode,
-    ensemble_mean,
-    next_annual_id,
-)
+from tcdb_spark.operators.aggregates import deterministic_mode, ensemble_mean
 from tcdb_spark.operators.joins import asof_join, exists_gate, interval_join, nearest_match
 from tcdb_spark.operators.windows import first_last_per_group, latest_per_key, topk_per_group
 
@@ -132,23 +128,6 @@ def test_ensemble_mean(spark):
     mean_row = out.where(F.col("ensemble") == 9000).first()
     assert mean_row["wind"] == 20.0  # DET member (-1) excluded
     assert out.count() == 5
-
-
-def test_next_annual_id(spark):
-    storms = spark.createDataFrame(
-        [(2022, 1, 3), (2022, 1, 7)], "season int, region_id int, annual_id int"
-    )
-    incoming = spark.createDataFrame(
-        [
-            (2022, 1, dt.datetime(2022, 6, 1), "AL012022"),
-            (2022, 1, dt.datetime(2022, 7, 1), "AL022022"),
-            (2023, 2, dt.datetime(2023, 6, 1), "EP012023"),
-        ],
-        "season int, region_id int, start_date timestamp, nhc_id string",
-    )
-    out = {r["nhc_id"]: r["annual_id"] for r in next_annual_id(storms, incoming, ["season", "region_id"]).collect()}
-    # existing max 7 -> 8, 9; fresh partition starts at 1
-    assert out == {"AL012022": 8, "AL022022": 9, "EP012023": 1}
 
 
 # ------------------------------------------------------- interval overlap
