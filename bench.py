@@ -116,7 +116,7 @@ def headline_impls() -> dict:
     still measured every run — as the clearly-separated
     ``pruned_config_samples`` diagnostics (recall-gated in pytest, not
     oracle-attested), continuing the r8 per-lane series under
-    ``<lane>_pruned`` / ``_arrow`` labels."""
+    ``<lane>_pruned`` labels."""
     from tcdb_spark.plans import QUERIES
 
     impls = dict(QUERIES)
@@ -125,29 +125,26 @@ def headline_impls() -> dict:
 
 
 def pruned_impls() -> dict:
-    """Production (pruned multi-probe / Arrow-twin) configurations of
-    the five lanes whose headline slot now times the registered
-    exact-mode impl (see headline_impls).  These are the SAME functions
-    the r1-r8 bench timed under the plain lane names, so each r9
+    """Production (pruned multi-probe) configurations of the four
+    lanes whose headline slot now times the registered exact-mode impl
+    (see headline_impls).  These are the SAME functions the r1-r8 bench
+    timed under the plain lane names, so each r9
     ``pruned_config_samples`` entry continues that lane's old series
-    1:1.  Output equality/recall is pinned in pytest
-    (tests/test_scale_ops.py, tests/test_training_ops.py,
-    text_char_entropy_arrow's bit-equality test), not by the oracle —
-    which is exactly why they no longer ride the headline."""
+    1:1.  Recall is pinned in pytest (tests/test_scale_ops.py,
+    tests/test_training_ops.py), not by the oracle — which is exactly
+    why they no longer ride the headline."""
     from tcdb_spark.plans.queries_sim import (
         hard_negative_mining_pruned,
         sim_ann_ivfpq_pruned,
         sim_ann_lsh_pruned,
         sim_ann_pq_pruned,
     )
-    from tcdb_spark.plans.queries_text import text_char_entropy_arrow
 
     return {
         "sim_ann_lsh_pruned": sim_ann_lsh_pruned,
         "knn_join_pruned": hard_negative_mining_pruned,
         "sim_ann_pq_pruned": sim_ann_pq_pruned,
         "sim_ann_ivfpq_pruned": sim_ann_ivfpq_pruned,
-        "text_char_entropy_arrow": text_char_entropy_arrow,
     }
 
 
@@ -344,7 +341,7 @@ def main() -> None:
             warm_samples[name] = ws
     timings = {n: timings[n] for n in HEADLINE}  # stable key order
     # production pruned/arrow configurations — diagnostics continuing
-    # the r1-r8 series of the five re-pointed lanes (see pruned_impls)
+    # the r1-r8 series of the four re-pointed lanes (see pruned_impls)
     pruned_samples: dict[str, float] = {}
     for name, fn in pruned_impls().items():
         run_once(fn(spark, sf_dir))  # one untimed settle pass

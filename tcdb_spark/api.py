@@ -431,15 +431,10 @@ class Engine:
         its top-``cand`` before any rank window runs."""
         from pyspark.sql import functions as F
 
+        from tcdb_spark.operators.similarity import _dot, _norm
         from tcdb_spark.plans.queries_ranking import bm25_scores, rank_leg, rrf_fuse
 
         lex = rank_leg(bm25_scores(docs, terms), "score", "lex_rank", cand=cand)
-
-        def _dot(a, b):
-            return F.aggregate(
-                F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
-            )
-
         sem_scored = (
             emb.select(
                 F.col("vec_id").alias("doc_id"),
@@ -450,7 +445,7 @@ class Engine:
                 "doc_id",
                 (
                     _dot(F.col("q_emb"), F.col("e"))
-                    / (F.sqrt(_dot(F.col("q_emb"), F.col("q_emb"))) * F.sqrt(_dot(F.col("e"), F.col("e"))))
+                    / (_norm(F.col("q_emb")) * _norm(F.col("e")))
                 ).alias("cos"),
             )
         )
@@ -494,32 +489,16 @@ class Engine:
 
         return mmr_rerank(candidates, k=k, lam=lam)
 
-    def winnow(self, sf_dir_or_docs, fast: bool = False) -> DataFrame:
+    def winnow(self, sf_dir_or_docs) -> DataFrame:
         """Robust winnowing fingerprints (Schleimer 2003, the MOSS
         index; plans/queries_text.winnow_fingerprint): (doc_id, pos,
         fp) rows guaranteeing any shared >= k+w-1 token run between
         documents shares a fingerprint. Accepts a testdata dir or a
-        (doc_id, text) DataFrame.  ``fast=True`` swaps the gram hash
-        md5 -> native xxhash64 (fp becomes BIGINT, same guarantee —
-        winnow_frame_fast; measured wall-time parity at sf0.1 — the
-        win is the 8-byte BIGINT fingerprint vs a 12+-byte string in
-        every downstream index row and shuffle, SCALE_SMOKE.md r8s3);
-        never mix the two variants' fingerprints in one index."""
-        from tcdb_spark.plans.queries_text import (
-            winnow_fingerprint,
-            winnow_frame,
-            winnow_frame_fast,
-        )
+        (doc_id, text) DataFrame."""
+        from tcdb_spark.plans.queries_text import winnow_fingerprint, winnow_frame
 
         if isinstance(sf_dir_or_docs, str):
-            if fast:
-                from tcdb_spark.plans.catalog import load_tables
-
-                docs = load_tables(self.spark, sf_dir_or_docs, "documents")["documents"]
-                return winnow_frame_fast(docs)
             return winnow_fingerprint(self.spark, sf_dir_or_docs)
-        if fast:
-            return winnow_frame_fast(sf_dir_or_docs)
         return winnow_frame(sf_dir_or_docs)
 
     def triangles(self, edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:

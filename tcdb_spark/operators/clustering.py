@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from tcdb_spark.operators.similarity import _dot
+from tcdb_spark.operators.similarity import _dot_sql
 
 
 def kmeans_assign(
@@ -57,19 +57,13 @@ def kmeans_assign(
     replaced (bit-equality A/B + oracle re-attested)."""
     base = emb.select(id_col, F.col(vec_col).cast("array<double>").alias("emb"))
 
-    def _dots(a: str, b: str) -> str:
-        return (
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            f"CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-        )
-
-    x2 = _dots("emb", "emb")
+    x2 = _dot_sql("emb", "emb")
     structs = []
     for j, c in enumerate(centroids):
         carr = "array(" + ", ".join(f"{float(v)!r}D" for v in c) + ")"
         c2 = float(np.dot(c, c))  # constant per centroid — fold it driver-side
         structs.append(
-            f"named_struct('d2', {x2} - 2.0D * {_dots('emb', carr)} + {c2!r}D, "
+            f"named_struct('d2', {x2} - 2.0D * {_dot_sql('emb', carr)} + {c2!r}D, "
             f"'c_id', {j})"
         )
     best = f"element_at(array_sort(array({', '.join(structs)})), 1)"

@@ -317,8 +317,8 @@ def asof_join_bucketed(
     Worst-case residual skew is a hot key whose rows share one bucket —
     shrink ``bucket_hours``; a fully degenerate single-instant key has
     no order to exploit in any as-of algorithm.  Planted-hot-key rescue
-    measured in tools/scale_smoke_skew.py; three-direction equivalence
-    pinned in tests/test_asof_bucketed.py.
+    measured in SCALE_SMOKE.md ("Round-6 skew shapes"); three-direction
+    equivalence pinned in tests/test_asof_bucketed.py.
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown as-of direction {direction!r}")

@@ -49,26 +49,6 @@ def pivot_matrix(
     return getattr(g, "agg")(getattr(F, agg)(value_col))
 
 
-def dense_time_axis(
-    df: DataFrame,
-    keys: list[str],
-    init_col: str,
-    hour_col: str,
-    max_hour_col: str,
-    resolution_hours: int,
-) -> DataFrame:
-    """Regular valid-time axis per group, NaN-filled where a member has no
-    step — the reference's xarray reindex-on-axis
-    (tcdb/etl/syntracks.py:110-127) as generate-axis + left join.
-    """
-    axis = df.groupBy(*keys, init_col).agg(F.max(max_hour_col).alias("__maxh"))
-    axis = axis.withColumn(
-        hour_col,
-        F.explode(F.sequence(F.lit(0), F.col("__maxh"), F.lit(resolution_hours))),
-    ).drop("__maxh")
-    return axis.join(df, on=[*keys, init_col, hour_col], how="left")
-
-
 def unpivot_radii(df: DataFrame, keys: list[str]) -> DataFrame:
     """Wide r34_ne..r64_nw back to long (RAD, quad, value) via ``stack`` —
     inverse of pivot_wind_radii (SURVEY.md §2.6 ``unpivot-step-rows``)."""

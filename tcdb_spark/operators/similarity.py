@@ -31,12 +31,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """SQL text of the dot-product fold over two ``array<double>``
+    expressions: ``((0.0 + a_0 b_0) + a_1 b_1) + ...``, left to right,
+    the accumulation order of DuckDB's ``list_dot_product``.  For
+    ``selectExpr`` sites, which parse it server-side in one py4j call."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        f"CAST(0.0 AS DOUBLE), (s, x) -> s + x)"
+    )
+
+
 def _dot(a, b):
+    """Column form of :func:`_dot_sql` — the same fold, the same doubles."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
 def _norm(a):
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
+    """``||a||`` as a column.  Precompute it once per row on each side of
+    a similarity join, so a candidate pair costs one fold (the dot)."""
+    return F.sqrt(_dot(a, a))
 
 
 def _cosine(a, b):

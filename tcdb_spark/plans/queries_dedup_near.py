@@ -14,7 +14,7 @@ embedding query, which is label-partitioned and subsampled.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcdb_spark.plans.catalog import load_tables, register
@@ -297,14 +297,6 @@ N_SIMHASH_BITS = 16
 _HEXES = "0123456789abcdef"
 
 
-def _bit_expr_spark(h: Column, b: int) -> Column:
-    """Bit b of a precomputed md5 hex string (one md5 per token, not one
-    per token per bit — md5 dominates the runtime)."""
-    nibble = F.substring(h, 1 + b // 4, 1)
-    val = F.instr(F.lit(_HEXES), nibble) - 1
-    return F.shiftright(val, 3 - b % 4).bitwiseAND(F.lit(1))
-
-
 def _bit_expr_sql(b: int) -> str:
     return (
         f"(((strpos('{_HEXES}', substring(h, {1 + b // 4}, 1)) - 1) >> {3 - b % 4}) & 1)"
@@ -406,7 +398,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.99 — finds exactly the planted scaled clones (scaling preserves
     cosine). The label equi-join keeps the pair space partitioned; the
     full-scale path is the LSH-bucketed variant (queries_sim.lsh_bucket_ann)."""
-    from tcdb_spark.plans.queries_sim import _dot, norm_of
+    from tcdb_spark.operators.similarity import _dot, _norm
 
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     base = e.where(F.col("vec_id") % 17 == 0).select(
@@ -418,7 +410,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(F.col("embedding").cast("array<double>"), lambda x: x * 2.0).alias("emb"),
     )
     # norms once per row before the self-join: one fold per pair after
-    sampled = base.unionByName(clones).withColumn("nrm", norm_of(F.col("emb")))
+    sampled = base.unionByName(clones).withColumn("nrm", _norm(F.col("emb")))
     a, b = sampled.alias("a"), sampled.alias("b")
     pairs = a.join(
         b,

@@ -33,8 +33,8 @@ from tcdb_spark.operators.evalmetrics import (
     precision_expr,
     retrieval_eval,
 )
+from tcdb_spark.operators.similarity import _dot, _dot_sql, _norm
 from tcdb_spark.plans.catalog import load_tables, register
-from tcdb_spark.plans.queries_sim import _dot, norm_of
 
 N_QUERIES = 5   # vec_id < 5 are the probe queries (same as sim_topk_cosine)
 TOP = 10        # metrics cutoff: P@10, MRR@10, nDCG@10
@@ -112,7 +112,7 @@ def retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     base = e.select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("nrm", norm_of(F.col("emb")))
+    ).withColumn("nrm", _norm(F.col("emb")))
     q = base.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),
@@ -121,8 +121,7 @@ def retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one server-parsed expression for the scoring projection — the
     # Column/lambda form of the dot fold alone cost ~0.05 s of py4j
-    # round-trips per build (round 8); the parsed AST is identical
-    # (same fold order, same CAST(0.0 AS DOUBLE) seed as _dot)
+    # round-trips per build (round 8)
     pairs = (
         base.crossJoin(F.broadcast(q))
         .where(F.col("vec_id") != F.col("q_id"))
@@ -130,8 +129,7 @@ def retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "CASE WHEN label = q_label THEN 1 ELSE 0 END AS rel",
             "vec_id",
-            "aggregate(zip_with(q_emb, emb, (x, y) -> x * y), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) / (q_nrm * nrm) AS cos",
+            f"{_dot_sql('q_emb', 'emb')} / (q_nrm * nrm) AS cos",
         )
     )
     return retrieval_eval(
@@ -194,14 +192,14 @@ def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.transform("s", lambda t: t["c"]).alias("cent"),
         )
-        .withColumn("c_nrm", norm_of(F.col("cent")))
+        .withColumn("c_nrm", _norm(F.col("cent")))
     )
     scored = (
         e.select(
             F.when(F.col("label") < POS_LABELS, 1).otherwise(0).alias("pos"),
             F.col("embedding").cast("array<double>").alias("emb"),
         )
-        .withColumn("nrm", norm_of(F.col("emb")))
+        .withColumn("nrm", _norm(F.col("emb")))
         .crossJoin(F.broadcast(cent))
         .select(
             "pos",

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tcdb_spark.operators.similarity import _dot_sql
 from tcdb_spark.plans.catalog import load_tables, register
 
 # Lucene/ES defaults
@@ -34,12 +35,6 @@ TOP_K = 20
 QUERY_TERMS = ["data", "merge", "window"]
 
 _TOKEN_RE = "[a-z0-9]+"
-
-
-def _tf_expr(term: str):
-    """tf(term) = number of exact token matches, as a codegen expression
-    over the per-row token array (no explode)."""
-    return F.size(F.filter("toks", lambda x: x == F.lit(term))).cast("double")
 
 
 def bm25_scores(
@@ -232,18 +227,15 @@ def hybrid_rrf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lex = rank_leg(bm25_scores(docs, QUERY_TERMS), "score", "lex_rank")
 
-    # server-parsed fold (DEVNOTES #43): identical HOF AST and in-fold
-    # sum order as the zip_with/aggregate Column chain it replaces
-    def _dot(a, b):
-        return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (s, x) -> s + x)"
-
+    # server-parsed fold (DEVNOTES #43): the same in-fold sum order as
+    # the Column form, parsed in one py4j call
     # the query norm is a per-query constant: hoist it into the 1-row
     # broadcast side so the corpus scan pays 2 array folds per row (dot +
     # candidate norm), not 3 — same values, same within-fold sum order
     q = (
         emb.where(F.col("vec_id") == 0)
         .selectExpr("CAST(embedding AS array<double>) AS q_emb")
-        .selectExpr("q_emb", f"sqrt({_dot('q_emb', 'q_emb')}) AS q_nrm")
+        .selectExpr("q_emb", f"sqrt({_dot_sql('q_emb', 'q_emb')}) AS q_nrm")
     )
     sem_scored = (
         emb.selectExpr("vec_id AS doc_id", "CAST(embedding AS array<double>) AS e")
@@ -251,7 +243,7 @@ def hybrid_rrf_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") != 0)
         .selectExpr(
             "doc_id",
-            f"({_dot('q_emb', 'e')} / (q_nrm * sqrt({_dot('e', 'e')}))) AS cos",
+            f"({_dot_sql('q_emb', 'e')} / (q_nrm * sqrt({_dot_sql('e', 'e')}))) AS cos",
         )
     )
     sem = rank_leg(sem_scored, "cos", "sem_rank")

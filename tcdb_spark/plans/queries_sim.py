@@ -27,29 +27,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from tcdb_spark.operators.similarity import _dot, _norm
 from tcdb_spark.plans.catalog import load_tables, register
 
 K = 5
 N_QUERIES = 5
 DIM = 64  # testdata embeddings are 64-dim float vectors (TESTDATA.md)
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def cosine_sim(a, b):
-    """Cosine similarity between two array<double> columns — sequential
-    left-to-right fold, matching C-loop accumulation order."""
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
-
-
-def norm_of(a):
-    """||a|| as a column — precompute ONCE PER ROW on each side of a
-    similarity join: cosine then costs one fold per candidate pair
-    (the dot) instead of three. Bit-identical to cosine_sim: same
-    fold order, sqrt(dot(a,a)) * sqrt(dot(b,b)) unchanged."""
-    return F.sqrt(_dot(a, a))
 
 
 # Shared brute-force oracle: exact top-K cosine for the first N_QUERIES
@@ -87,7 +70,7 @@ def sim_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_tables(spark, sf_dir, "embeddings")["embeddings"]
     base = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("nrm", norm_of(F.col("emb")))
+    ).withColumn("nrm", _norm(F.col("emb")))
     q = base.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("q_emb"),
@@ -200,7 +183,7 @@ def lsh_bucket_ann(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("emb"),
         )
-        .withColumn("nrm", norm_of(F.col("emb")))  # once per vector, not per pair
+        .withColumn("nrm", _norm(F.col("emb")))  # once per vector, not per pair
         .withColumn("__all_dots", _all_dots(F.col("emb")))
         .selectExpr(
             "vec_id", "emb", "nrm", "__all_dots",
@@ -212,7 +195,7 @@ def lsh_bucket_ann(
     q = queries.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").cast("array<double>").alias("q_emb"),
-    ).withColumn("q_nrm", norm_of(F.col("q_emb")))
+    ).withColumn("q_nrm", _norm(F.col("q_emb")))
 
     if exact:
         # all-buckets probe: per table every bucket id is a probe, so the
@@ -394,9 +377,7 @@ def embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=DIM,
         col="emb",
     )
-    sq = F.aggregate(
-        F.transform(F.col("pca"), lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
-    )
+    sq = _dot(F.col("pca"), F.col("pca"))
     return out.select("vec_id", F.round(sq, 6).alias("pca_sq_norm"))
 
 

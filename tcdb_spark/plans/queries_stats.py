@@ -556,7 +556,8 @@ _BT_ITERS = 25
 # under the 10 MB broadcast threshold — and rides a driver-local
 # relation instead of a parquet round-trip (no work_dir given).  Above
 # it (or with an explicit work_dir) rounds keep the restartable parquet
-# discipline; tools/scale_smoke_r5.py smokes that path at 10^5 items.
+# discipline; SCALE_SMOKE.md ("Round-5 shapes") records that path at
+# 10^5 items.
 _BT_LOCAL_MAX = 50_000
 
 
@@ -687,7 +688,7 @@ def bradley_terry_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible against the identical unrolled-CTE oracle.  Same
     p=1 start, same zero-guards, same round(6) normalized output as the
     driver solve — pinned equal to it in tests/test_preference_graph.py
-    and smoked at 10^5 items (tools/scale_smoke_r5.py).
+    and smoked at 10^5 items (SCALE_SMOKE.md, "Round-5 shapes").
     """
     return bt_ratings_distributed(pairwise_wins(spark, sf_dir), "event_type")
 
@@ -738,7 +739,7 @@ def bt_ratings_distributed(
     eliminated).  An explicit ``work_dir`` keeps the parquet rounds —
     that is the restartability contract a caller opts into — as does
     any item set past the local cap (the documented fallback; smoked at
-    10^5 items in tools/scale_smoke_r5.py)."""
+    10^5 items, SCALE_SMOKE.md "Round-5 shapes")."""
     from tcdb_spark.session import scratch_dir
 
     spark = wins_df.sparkSession

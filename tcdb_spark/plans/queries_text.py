@@ -373,32 +373,6 @@ def winnow_frame(d: DataFrame) -> DataFrame:
     return _winnow_pick(hashes)
 
 
-def winnow_frame_fast(d: DataFrame) -> DataFrame:
-    """Production twin of :func:`winnow_frame` with the gram hash
-    swapped md5 -> native ``xxhash64`` (fp becomes BIGINT).  The
-    winnowing GUARANTEE — any copied run of >= k + w - 1 tokens shares
-    at least one fingerprint, >= 1 selection per window — is
-    hash-agnostic (Schleimer et al. §3 prove it for any total order on
-    gram hashes), so the twin detects the same planted overlaps
-    (pinned in tests/test_corpus_ops.py); the SELECTED positions
-    differ, so fingerprints from the two variants must never be mixed
-    in one index.  md5 is oracle-mandated (DuckDB must replicate
-    values bit-for-bit); xxhash64 stays inside whole-stage codegen.
-    Honest measurement (idle best-of-3, sf0.1 and 4x): WALL-TIME
-    PARITY — the md5 cost is NOT the bottleneck at these scales (an
-    early 20% reading was warmup-ordering noise; SCALE_SMOKE.md
-    r8s3).  The twin's real win is the fingerprint TYPE: an 8-byte
-    BIGINT vs a 12+-byte string in every index row, shuffle, and
-    contamination join downstream.  Keep the md5 lane as the
-    cross-engine attestation path."""
-    hashes = _winnow_tokens(d).selectExpr(
-        "doc_id",
-        f"transform(sequence(1, size(tokens) - {_WK - 1}), i -> "
-        f"xxhash64(concat_ws(' ', {_W_GRAM_SPARK}))) AS hashes",
-    )
-    return _winnow_pick(hashes)
-
-
 _WINNOW_CONTAM_ORACLE = f"""
     WITH fps AS ({_WINNOW_ORACLE.strip()})
     SELECT a.doc_id AS train_doc, b.doc_id AS eval_doc,
@@ -688,78 +662,6 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("entropy"),
         F.round(F.array_max("counts").cast("double") / n, 6).alias("top_char_frac"),
-    )
-
-
-def text_char_entropy_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow production twin of ``text_char_entropy`` (bench override,
-    same split as the ANN pruned configs): the O(distinct x len)
-    per-char counting runs as one numpy ``np.unique`` per doc inside a
-    mapInPandas batch instead of len x distinct interpreted lambda
-    evaluations (DEVNOTES #53). The entropy fold itself stays a
-    SEQUENTIAL Python sum over the sorted distinct counts — the exact
-    accumulation order of the HOF/oracle path — so outputs are pinned
-    EQUAL (not approximately equal) in tests/test_clustering.py.
-    Whitespace strips with Java's ASCII \\s class to mirror the JVM
-    regex; non-ASCII case folding may differ by locale — the HOF lane
-    is the semantics of record, this one its measured-equal twin."""
-    import math
-    import re
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import numpy as np
-    import pandas as pd
-
-    def _round_half_up(x: float, nd: int) -> float:
-        # Spark's round() = BigDecimal.valueOf(double) + HALF_UP; Python's
-        # builtin round is banker's and differs on exact .5 boundaries
-        # (13/128 at 6 places — found by the equality pin). Decimal(repr())
-        # mirrors BigDecimal.valueOf's shortest-representation semantics.
-        return float(Decimal(repr(x)).quantize(Decimal(f"1e-{nd}"), ROUND_HALF_UP))
-
-    _ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")
-    d = fan_out_scan(load_tables(spark, sf_dir, "documents")["documents"])
-
-    def score(batches):
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if text is None or not text.strip():
-                    continue
-                cs = np.array(list(_ws.sub("", text.lower())))
-                n = len(cs)
-                if n == 0:
-                    continue
-                _, counts = np.unique(cs, return_counts=True)  # sorted distinct
-                ent = 0.0
-                for c in counts:  # sequential fold == HOF aggregate order
-                    p = c / n
-                    ent += p * math.log2(p)
-                out.append(
-                    (
-                        doc_id,
-                        n,
-                        len(counts),
-                        _round_half_up(-ent, 4),
-                        _round_half_up(int(counts.max()) / n, 6),
-                    )
-                )
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "doc_id",
-                        "n_chars_nospace",
-                        "n_distinct_chars",
-                        "entropy",
-                        "top_char_frac",
-                    ],
-                )
-
-    return d.select("doc_id", "text").mapInPandas(
-        score,
-        schema="doc_id bigint, n_chars_nospace int, n_distinct_chars int, "
-        "entropy double, top_char_frac double",
     )
 
 

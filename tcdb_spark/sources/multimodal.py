@@ -1920,52 +1920,6 @@ def make_test_wav(
     return b"RIFF" + _struct.pack("<I", len(body)) + body
 
 
-def extract_features_arrow(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_features` — identical
-    semantics, but the batch stays a ``pyarrow.RecordBatch`` end to
-    end.  For binary-heavy columns this skips the Arrow->pandas
-    object-boxing round trip (every payload becoming a Python bytes
-    inside a pandas object Series) that the mapInPandas lane pays; the
-    payload buffers are sliced straight out of the Arrow binary array.
-    Equality with the pandas lane is pinned in tests.
-    """
-    import pyarrow as pa
-
-    def _one(payload: bytes | None) -> list[float] | None:
-        if payload is None:
-            return None
-        real = media_features(payload)
-        if real is not None:
-            return real
-        if not decode_stub:
-            raise NotImplementedError(
-                "payload format needs codec libraries not in this container"
-            )
-        return _fake_features(payload)
-
-    def _op(batches: Iterator) -> Iterator:
-        for batch in batches:
-            pay = batch.column(batch.schema.get_field_index("payload"))
-            raw = [pay[i].as_py() for i in range(len(pay))]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(batch.schema.get_field_index("media_id")),
-                    batch.column(batch.schema.get_field_index("media_type")),
-                    # FEATURES_SCHEMA declares n_bytes int (32-bit):
-                    # mapInArrow does NO implicit casting, the arrays
-                    # must match the declared Arrow types exactly
-                    pa.array(
-                        [len(p) if p is not None else 0 for p in raw], pa.int32()
-                    ),
-                    pa.array([_one(p) for p in raw], pa.list_(pa.float64())),
-                ],
-                names=["media_id", "media_type", "n_bytes", "features"],
-            )
-
-    cols = ["media_id", "payload", "media_type"]
-    return media.select(*cols).mapInArrow(_op, schema=FEATURES_SCHEMA)
-
-
 # ------------------------------------------------- perceptual image hashing
 
 AHASH_GRID = 8  # 8x8 cells -> 64-bit average hash

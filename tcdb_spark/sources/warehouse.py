@@ -421,15 +421,17 @@ class Warehouse:
            co-located, zero Exchange;
         3. write the merged touched buckets bucketed into ``v=n+1``, then
            hard-link every untouched bucket file from ``v=n`` beside them;
-        4. swap the pointer.
+        4. swap the pointer — unless the MERGE inserted and updated
+           nothing: then ``v=n+1`` is removed and ``v=n`` stays current
+           (as in :meth:`write`).
 
         Requires the table's bucket columns to be a subset of ``keys``
         (same-key rows must share a bucket or the scoped join misses
         matches). Runs under the per-table writer lock (ConcurrentWrite-
         Error on contention). Returns stats: {'version',
         'touched_buckets', 'rewritten_files', 'carried_files',
-        'n_buckets', 'rows'} (rows: the new version's row count, read
-        without scanning it).
+        'n_buckets', 'rows'} (rows: the resulting version's row count,
+        read without scanning it).
         """
         with self._write_lock(table):
             return self._merge_scoped_locked(table, incoming, keys, **merge_kwargs)
@@ -516,27 +518,34 @@ class Warehouse:
             w = merged.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
             w = w.sortBy(*spec["sort_cols"])
             w.option("path", new_path).format("parquet").saveAsTable(new_name)
-            for f in carried_files:
-                os.link(os.path.join(old_path, f), os.path.join(new_path, f))
-            # the saveAsTable cached its file listing before the links landed
-            self.spark.catalog.refreshTable(new_name)
+            changed = _has_changes(upsert)
+            if changed:
+                for f in carried_files:
+                    os.link(os.path.join(old_path, f), os.path.join(new_path, f))
+                # the saveAsTable cached its file listing before the links landed
+                self.spark.catalog.refreshTable(new_name)
+            else:
+                # nothing inserted or updated: publish nothing (Warehouse.write)
+                self.spark.sql(f"DROP TABLE IF EXISTS {new_name}")
+                shutil.rmtree(new_path, ignore_errors=True)
         finally:
             self.spark.sql(f"DROP TABLE IF EXISTS {stage_name}")
             shutil.rmtree(stage_path, ignore_errors=True)
 
-        with open(self._bucket_marker(table, v_new), "w") as f:
-            json.dump(spec, f)
-        self._publish({table: v_new})
-        # rows of the new version: the merged buckets as the write counted
-        # them, the carried files from their parquet footers
+        # rows of the resulting version: the merged buckets as the write
+        # counted them, the carried files from their parquet footers
         carried_rows = sum(
-            pq.ParquetFile(os.path.join(new_path, f)).metadata.num_rows for f in carried_files
+            pq.ParquetFile(os.path.join(old_path, f)).metadata.num_rows for f in carried_files
         )
+        if changed:
+            with open(self._bucket_marker(table, v_new), "w") as f:
+                json.dump(spec, f)
+            self._publish({table: v_new})
         return {
-            "version": v_new,
+            "version": v_new if changed else v_old,
             "touched_buckets": sorted(touched),
-            "rewritten_files": len(touched_files),
-            "carried_files": len(carried_files),
+            "rewritten_files": len(touched_files) if changed else 0,
+            "carried_files": len(carried_files) if changed else len(old_files),
             "n_buckets": n_buckets,
             "rows": merge_counts(upsert)["rows"] + carried_rows,
         }

@@ -490,6 +490,3 @@ def test_engine_session_r8s3_facades(spark, tmp_path):
     )
     pairs = eng.preference_pairs_topk(scored, "g", "id", "s", k=3)
     assert pairs.count() == 3  # C(3,2)
-
-    fast = eng.winnow(docs.selectExpr("doc_id", "text"), fast=True)
-    assert fast.schema["fp"].dataType.typeName() == "long"

@@ -137,7 +137,8 @@ def test_planted_hot_key_equivalence(spark, direction):
     """One key carries 95% of both sides (the planted-skew fixture
     shape from the dedup/graph family): results must stay identical in
     ALL THREE directions — the wall-clock rescue at scale is measured
-    in tools/scale_smoke_skew.py, correctness is pinned here."""
+    in SCALE_SMOKE.md ("Round-6 skew shapes"), correctness is pinned
+    here."""
     rng = np.random.default_rng(5)
     n = 20_000
     keys = np.where(rng.random(n) < 0.95, 1, rng.integers(2, 20, n))

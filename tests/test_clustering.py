@@ -251,19 +251,6 @@ def test_pq_search_matches_bruteforce_ranks(spark):
                 assert abs(c - true) <= 2e-6
 
 
-def test_char_entropy_arrow_twin_equals_hof_lane(spark):
-    """The bench's Arrow twin must reproduce the oracle lane's output
-    EXACTLY (same sorted-distinct sequential fold, same rounding) on
-    the real corpus at two SFs."""
-    from tcdb_spark.plans import QUERIES
-    from tcdb_spark.plans.queries_text import text_char_entropy_arrow
-
-    for sf in (SF, SF01):
-        hof = {tuple(r) for r in QUERIES["text_char_entropy"](spark, sf).collect()}
-        arw = {tuple(r) for r in text_char_entropy_arrow(spark, sf).collect()}
-        assert hof == arw
-
-
 def test_ivfpq_exact_mode_equals_brute_force(spark):
     from tcdb_spark.plans import QUERIES
 

@@ -447,39 +447,6 @@ def test_containment_join_finds_swallowed_eval_doc(spark, tmp_path):
     assert (5, 2) not in out and (5, 4) not in out
 
 
-def test_winnow_fast_twin_guarantee(spark, tmp_path):
-    """winnow_frame_fast (xxhash64 fingerprints) carries the same
-    Schleimer guarantee as the md5 lane: shared >= k+w-1 token runs
-    share a fingerprint VALUE, unrelated docs share none, and at least
-    one selection lands per window. Selected positions legitimately
-    DIFFER from the md5 variant (different total order on gram hashes)
-    — only the guarantee is pinned, not the positions."""
-    from tcdb_spark.plans.queries_text import winnow_frame_fast, _WK, _WW
-
-    shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 >= k+w-1=7
-    texts = {
-        1: "one two three four five six " + shared + " tail piece here now",
-        2: "totally different opening words go here " + shared,
-        3: "nothing in common with the others at all kappa lambda mu nu xi",
-    }
-    d = spark.createDataFrame(list(texts.items()), "doc_id int, text string")
-    out = winnow_frame_fast(d).collect()
-    assert all(isinstance(r.fp, int) for r in out), "fast twin emits BIGINT fps"
-    fps = {}
-    for r in out:
-        fps.setdefault(r.doc_id, set()).add(r.fp)
-    assert fps[1] & fps[2]
-    assert not (fps[1] & fps[3]) and not (fps[2] & fps[3])
-    for doc_id, text in texts.items():
-        n_grams = len(text.split()) - _WK + 1
-        n_windows = n_grams - _WW + 1
-        assert len(fps[doc_id]) >= n_windows / _WW
-        # every selected position indexes a real gram
-        for r in out:
-            if r.doc_id == doc_id:
-                assert 1 <= r.pos <= n_grams
-
-
 def test_compression_signals_spectrum(spark):
     """zlib ratio orders content classes the way curation expects:
     boilerplate << natural prose << hex noise; NULL/empty rows emit

@@ -164,6 +164,29 @@ def test_a_merge_that_changes_nothing_publishes_nothing(spark, tmp_path, deck_di
     assert wh.current_version("tracks") == versions["tracks"]
 
 
+def test_a_bucketed_replay_publishes_nothing(spark, tmp_path, deck_dir):
+    """The bucketed layout's replay: the second run's observations MERGE
+    goes through merge_scoped, which must publish no version and leave no
+    staged directory when it changed no row."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    tables = ["storms", "observations"]
+
+    def tick(n):
+        return run_bdeck_job(
+            spark, read_bdeck(spark, deck_dir), wh, f"B__{n}", now=_now(),
+            bucket_obs=True, n_buckets=4,
+        )
+
+    first = tick(1)
+    assert wh.is_bucketed("observations")
+    versions = {t: wh.current_version(t) for t in tables}
+    dirs = {t: sorted(os.listdir(os.path.join(wh.root, t))) for t in tables}
+    assert tick(2) == first
+    assert {t: wh.current_version(t) for t in tables} == versions
+    assert {t: sorted(os.listdir(os.path.join(wh.root, t))) for t in tables} == dirs
+    assert not spark.catalog.tableExists(f"wh_observations__v{versions['observations'] + 1}")
+
+
 def _cache_state(spark):
     jsc = spark.sparkContext._jsc
     return jsc.getPersistentRDDs().size(), spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -173,29 +173,6 @@ def test_resample_media_distributed(spark):
     assert out[2].payload is None
 
 
-def test_map_in_arrow_twin_matches_pandas_lane(spark):
-    """extract_features_arrow (mapInArrow) must produce exactly the
-    rows of extract_features (mapInPandas) on mixed real+stub payloads."""
-    from tcdb_spark.sources.multimodal import (
-        extract_features,
-        extract_features_arrow,
-        make_test_ppm,
-        make_test_wav,
-    )
-
-    rows = [
-        (1, bytearray(make_test_ppm(4, 3)), "image"),
-        (2, bytearray(make_test_wav(64)), "audio"),
-        (3, bytearray(b"\x00\x01opaqueblob"), "video"),
-        (4, None, "image"),
-    ]
-    df = spark.createDataFrame(rows, ["media_id", "payload", "media_type"])
-    a = {r["media_id"]: r.asDict() for r in extract_features(df).collect()}
-    b = {r["media_id"]: r.asDict() for r in extract_features_arrow(df).collect()}
-    assert a == b
-    assert a[1]["features"] is not None and a[4]["features"] is None
-
-
 # ------------------------------------------------------------- PNG decode
 
 

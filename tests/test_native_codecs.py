@@ -260,18 +260,50 @@ def test_native_png_bit_exact_all_color_types(channels):
     assert (a["pixels"] == b["pixels"]).all()
 
 
+def _paeth_png(px: np.ndarray) -> bytes:
+    """Independently-built RGB PNG with every row Paeth-filtered (type 4)."""
+    import struct as _s
+    import zlib
+
+    h, w, c = px.shape
+    raw = bytearray()
+    prev = [0] * (w * c)
+    for y in range(h):
+        line = px[y].ravel().astype(np.int64).tolist()
+        row = bytearray([4])
+        for x in range(w * c):
+            a = line[x - c] if x >= c else 0
+            b = prev[x]
+            cc = prev[x - c] if x >= c else 0
+            p = a + b - cc
+            pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
+            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
+            row.append((line[x] - pred) & 255)
+        raw += row
+        prev = line
+
+    def chunk(cid, body):
+        return (
+            _s.pack(">I", len(body)) + cid + body
+            + _s.pack(">I", zlib.crc32(cid + body) & 0xFFFFFFFF)
+        )
+
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", _s.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
+        + chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + chunk(b"IEND", b"")
+    )
+
+
 @png_native
 def test_native_png_paeth_filtered_bit_exact():
-    """Real-world PNGs are Paeth-heavy; the independently-built
-    all-Paeth fixture from the scale smoke must decode identically
-    through libpng and the stdlib filter inverter."""
-    smoke = _load_by_path(
-        "scale_smoke_media",
-        os.path.join(os.path.dirname(_HERE), "tools", "scale_smoke_media.py"),
-    )
+    """Real-world PNGs are Paeth-heavy; an independently-built all-Paeth
+    fixture must decode identically through libpng and the stdlib
+    filter inverter."""
     rng = np.random.default_rng(99)
     px = rng.integers(0, 256, (32, 48, 3), dtype=np.uint8)
-    payload = smoke._paeth_png(px)
+    payload = _paeth_png(px)
     a = mm.decode_png(payload)
     b = nc.decode_png_native(payload)
     assert (a["pixels"] == px).all()

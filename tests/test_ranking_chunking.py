@@ -113,7 +113,7 @@ def test_semantic_dedup_recall_and_precision(spark):
     verified (precision 1.0 against the brute-force superset)."""
     from tcdb_spark.plans import QUERIES
     from tcdb_spark.plans.catalog import load_tables
-    from tcdb_spark.plans.queries_sim import _dot, norm_of
+    from tcdb_spark.operators.similarity import _dot, _norm
 
     got = _rows(QUERIES["semantic_dedup"](spark, SF), ["vec_a", "vec_b", "cosine"])
 
@@ -125,7 +125,7 @@ def test_semantic_dedup_recall_and_precision(spark):
             "emb"
         ),
     )
-    u = base.unionByName(clones).withColumn("nrm", norm_of(F.col("emb")))
+    u = base.unionByName(clones).withColumn("nrm", _norm(F.col("emb")))
     a, b = u.alias("a"), u.alias("b")
     brute = (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))

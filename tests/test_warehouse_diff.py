@@ -116,7 +116,8 @@ def test_merge_scoped_holds_lock(spark, tmp_path):
     with pytest.raises(ConcurrentWriteError):
         wh.merge_scoped("obs2", df, keys=["storm_id"], dedupe_incoming=False)
     wh.force_unlock("obs2")
-    stats = wh.merge_scoped("obs2", df, keys=["storm_id"], dedupe_incoming=False)
+    changed = spark.createDataFrame([(1, 5.0)], "storm_id bigint, wind double")
+    stats = wh.merge_scoped("obs2", changed, keys=["storm_id"], dedupe_incoming=False)
     assert stats["version"] == 2
 
 
