@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tcdb_spark.dims_models import ADECK_MODELS, MODEL_CATALOG
+from tcdb_spark.session import local_frame
 
 REGIONS = [
     (1, "North Atlantic", "AL", "L"),
@@ -35,14 +36,14 @@ MODEL_TECHS = ADECK_MODELS + ["CARQ", "BEST"]
 
 
 def regions_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        REGIONS, "region_id long, long_name string, short_name string, region_char string"
+    return local_frame(
+        spark, REGIONS, "region_id long, long_name string, short_name string, region_char string"
     ).withColumn("last_update", F.current_timestamp())
 
 
 def data_sources_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        DATA_SOURCES, "data_source_id long, long_name string, short_name string"
+    return local_frame(
+        spark, DATA_SOURCES, "data_source_id long, long_name string, short_name string"
     ).withColumn("last_update", F.current_timestamp())
 
 
@@ -50,6 +51,6 @@ def models_df(spark: SparkSession) -> DataFrame:
     """The full 492-technique catalog; model_id is the 1-based catalog
     position (stable: the catalog is append-only data)."""
     rows = [(i + 1, ln, sn) for i, (ln, sn) in enumerate(MODEL_CATALOG)]
-    return spark.createDataFrame(
-        rows, "model_id long, long_name string, short_name string"
+    return local_frame(
+        spark, rows, "model_id long, long_name string, short_name string"
     ).withColumn("last_update", F.current_timestamp())

@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from tcdb_spark.session import local_frame
+
 
 def count_by(df: DataFrame, keys: list[str], count_col: str = "n") -> DataFrame:
     """Count-per-group family (db/basin_model_counts.sql,
@@ -236,7 +238,7 @@ def funnel(
     for c in cached:
         c.unpersist()
     schema = T.StructType([T.StructField(n, T.LongType(), False) for n in names])
-    return events.sparkSession.createDataFrame([tuple(values)], schema)
+    return local_frame(events.sparkSession, [tuple(values)], schema)
 
 
 def basket_pair_lift(ob: DataFrame, min_support: int = 10) -> DataFrame:

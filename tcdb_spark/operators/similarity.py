@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from tcdb_spark.session import local_frame
+
 
 def _dot_sql(a: str, b: str) -> str:
     """SQL text of the dot-product fold over two ``array<double>``
@@ -510,8 +512,8 @@ def ivf_persist(
     indexed, centroids = ivf_build(emb, k_centroids=k_centroids, seed=seed)
     v = warehouse.write(table, indexed, partition_by=["bucket"])
     cent_rows = [(i, c) for i, c in enumerate(centroids)]
-    cent_df = indexed.sparkSession.createDataFrame(
-        cent_rows, "bucket int, centroid array<double>"
+    cent_df = local_frame(
+        indexed.sparkSession, cent_rows, "bucket int, centroid array<double>"
     )
     warehouse.write(f"{table}__centroids", cent_df)
     return v
@@ -1052,14 +1054,16 @@ def ivfpq_persist(
     spark = encoded.sparkSession
     warehouse.write(
         f"{table}__centroids",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, c) for i, c in enumerate(centroids)],
             "bucket int, centroid array<double>",
         ),
     )
     warehouse.write(
         f"{table}__codebooks",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (s, j, list(code))
                 for s, cb in enumerate(codebooks)

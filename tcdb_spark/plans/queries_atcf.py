@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from tcdb_spark.operators.pivot import pivot_wind_radii
 from tcdb_spark.plans.catalog import register
+from tcdb_spark.session import local_frame
 from tcdb_spark.sources.atcf import (
     parse_adeck_lines,
     parse_bdeck_lines,
@@ -78,7 +79,7 @@ def _values_oracle(rows: list[tuple], cols: list[tuple[str, str]]) -> str:
 def scan_adeck_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A-deck scan: split/filter/typed projection (tcdb/etl/atcf.py:19-88;
     ragged handling :227-250). Golden-checked against hand-computed rows."""
-    lines = spark.createDataFrame([(l,) for l in ADECK_LINES], "value string")
+    lines = local_frame(spark, [(l,) for l in ADECK_LINES], "value string")
     parsed = parse_adeck_lines(lines)
     return parsed.select(
         "BASIN", "SNUM", "DATETIME",
@@ -116,7 +117,7 @@ def scan_bdeck_storms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B-deck scan -> per-storm summary (toStormDict set-based,
     tcdb/etl/atcf.py:289-337): min/max dates, first-row lat/lon, invest vs
     named naming, nhc_id composition. Golden-checked."""
-    lines = spark.createDataFrame([(l,) for l in BDECK_LINES], "value string")
+    lines = local_frame(spark, [(l,) for l in BDECK_LINES], "value string")
     return storms_from_bdeck(parse_bdeck_lines(lines))
 
 
@@ -136,7 +137,7 @@ _RADII_TYPES = [("BASIN", "VARCHAR"), ("SNUM", "INTEGER"), ("DATETIME", "TIMESTA
 def pivot_wind_radii_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wind-radii long->wide reshape (tcdb/etl/atcf.py:340-385,418-427):
     <=3 RAD rows per cycle become 12 r{34,50,64}_{quad} columns."""
-    lines = spark.createDataFrame([(l,) for l in BDECK_LINES], "value string")
+    lines = local_frame(spark, [(l,) for l in BDECK_LINES], "value string")
     parsed = parse_bdeck_lines(lines)
     return pivot_wind_radii(parsed, ["BASIN", "SNUM", "DATETIME"])
 
@@ -167,7 +168,7 @@ def dim_model_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles for the join."""
     from tcdb_spark.dims import MODEL_TECHS, models_df
 
-    lines = spark.createDataFrame([(l,) for l in ADECK_LINES], "value string")
+    lines = local_frame(spark, [(l,) for l in ADECK_LINES], "value string")
     parsed = parse_adeck_lines(lines)
     cat = models_df(spark).select(
         F.col("short_name").alias("tech"), "long_name"
@@ -267,7 +268,7 @@ def forecast_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, as operational verification does.  Scale shape: best track is
     dimension-sized -> broadcast; forecasts never shuffle."""
     fc = parse_adeck_lines(
-        spark.createDataFrame([(l,) for l in ADECK_VERIF_LINES], "value string")
+        local_frame(spark, [(l,) for l in ADECK_VERIF_LINES], "value string")
     ).select(
         F.col("TECH").alias("tech"),
         F.col("TAU").alias("tau"),
@@ -277,7 +278,7 @@ def forecast_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bt = (
         parse_bdeck_lines(
-            spark.createDataFrame([(l,) for l in BDECK_VERIF_LINES], "value string")
+            local_frame(spark, [(l,) for l in BDECK_VERIF_LINES], "value string")
         )
         .select(F.col("DATETIME").alias("dt"), F.col("LAT").alias("blat"), F.col("LON").alias("blon"))
         .distinct()
@@ -329,7 +330,7 @@ def forecast_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tcdb_spark.functions.scalar import haversine
 
     fc = parse_adeck_lines(
-        spark.createDataFrame([(l,) for l in ADECK_VERIF_LINES], "value string")
+        local_frame(spark, [(l,) for l in ADECK_VERIF_LINES], "value string")
     ).select(
         F.col("TECH").alias("tech"),
         F.col("TAU").alias("tau"),
@@ -339,7 +340,7 @@ def forecast_skill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bt = (
         parse_bdeck_lines(
-            spark.createDataFrame([(l,) for l in BDECK_VERIF_LINES], "value string")
+            local_frame(spark, [(l,) for l in BDECK_VERIF_LINES], "value string")
         )
         .select(F.col("DATETIME").alias("dt"), F.col("LAT").alias("blat"), F.col("LON").alias("blon"))
         .distinct()
@@ -413,7 +414,7 @@ def intensity_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     unverifiable leads drop); errors are exact kt differences averaged
     once — the only rounding is the output's."""
     fc = parse_adeck_lines(
-        spark.createDataFrame([(l,) for l in ADECK_VERIF_LINES], "value string")
+        local_frame(spark, [(l,) for l in ADECK_VERIF_LINES], "value string")
     ).select(
         F.col("TECH").alias("tech"),
         F.timestamp_add("HOUR", F.col("TAU"), F.col("DATETIME")).alias("valid"),
@@ -421,7 +422,7 @@ def intensity_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bt = (
         parse_bdeck_lines(
-            spark.createDataFrame([(l,) for l in BDECK_VERIF_LINES], "value string")
+            local_frame(spark, [(l,) for l in BDECK_VERIF_LINES], "value string")
         )
         .select(F.col("DATETIME").alias("dt"), F.col("VMAX").alias("bvmax"))
         .distinct()

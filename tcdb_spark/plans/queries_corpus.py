@@ -20,6 +20,7 @@ from pyspark.sql.window import Window as W
 
 from tcdb_spark.plans.catalog import ORACLES, load_tables, register
 from tcdb_spark.plans.queries_dedup_near import dedup_minhash_lsh
+from tcdb_spark.session import local_frame
 
 
 def _tokens(text: Column) -> Column:
@@ -648,9 +649,10 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same convention as the ATCF scan goldens)."""
     from tcdb_spark.operators.bpe import bpe_learn
 
-    d = spark.createDataFrame([(t,) for t in _BPE_CORPUS], "text string")
+    d = local_frame(spark, [(t,) for t in _BPE_CORPUS], "text string")
     merges = bpe_learn(spark, d, n_merges=16)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, l, r) for i, (l, r) in enumerate(merges)],
         "rank int, lhs string, rhs string",
     )
@@ -690,7 +692,8 @@ def bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     tcdb has no tokenizer — this is an LLM-pipeline extension op."""
     from tcdb_spark.operators.bpe import bpe_encode
 
-    d = spark.createDataFrame(
+    d = local_frame(
+        spark,
         [(i + 1, t) for i, t in enumerate(_BPE_CORPUS)], "doc_id int, text string"
     )
     merges = [(l, r) for _, l, r in _BPE_EXPECTED]

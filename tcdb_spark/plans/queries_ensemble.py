@@ -22,6 +22,7 @@ from tcdb_spark.operators.syntracks import (
 )
 from tcdb_spark.plans.catalog import register
 from tcdb_spark.plans.queries_atcf import _values_oracle
+from tcdb_spark.session import local_frame
 from tcdb_spark.sources.mat_ensemble import fake_ensemble_df
 
 _INIT = dt.datetime(2022, 9, 1, 0, 0, 0)
@@ -53,7 +54,8 @@ def join_track_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-assigned member keeps its identity; the all-NaN member drops.
     """
     tracks = drop_empty_tracks(fake_ensemble_df(spark, n_ens=N_ENS, n_steps=N_STEPS, init=_INIT))
-    invests = spark.createDataFrame(
+    invests = local_frame(
+        spark,
         [("ECMWF", _INIT, 1, "INVEST-95L", 10.2, -40.2, _INIT)],
         "model string, init timestamp, annual_id int, name string, lat double, lon double, valid timestamp",
     )

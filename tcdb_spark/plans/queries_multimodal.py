@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from tcdb_spark.plans.catalog import register
 from tcdb_spark.plans.queries_atcf import _values_oracle
+from tcdb_spark.session import local_frame
 from tcdb_spark.sources.multimodal import (
     FEATURE_DIM,
     _fake_features,
@@ -60,7 +61,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload -> feature vector via Arrow-batched mapInPandas
     (§2.12 multimodal plumbing; decode stubbed deterministically). Output
     exploded to scalar rows so the value-hash stays array-free."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p), t) for mid, p, t in _PAYLOADS],
         "media_id long, payload binary, media_type string",
     )
@@ -133,7 +135,8 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket sizes exactly like the text SimHash lane."""
     from tcdb_spark.sources.multimodal import media_ahash, media_near_dup_pairs
 
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p)) for mid, p in _PHASH_IMAGES],
         "media_id long, payload binary",
     )
@@ -166,7 +169,7 @@ _TCV_TYPES = [
 def scan_tcvitals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """tcvitals whitespace-format scan with sentinel->null handling
     (scripts/download_parse_tcvitals.py:5-30). Golden-checked."""
-    lines = spark.createDataFrame([(l,) for l in _TCVITALS_LINES], "value string")
+    lines = local_frame(spark, [(l,) for l in _TCVITALS_LINES], "value string")
     return parse_tcvitals_lines(lines).select(
         "org", "storm_name", "datetime_utc", "lat", "lon", "mslp_mb",
         "r50_ne_km", "max_forecast_hour",
@@ -225,7 +228,8 @@ def audio_spectral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FLAC row must featurize IDENTICALLY to its WAV source material,
     which rides the native-codec routing seam).  Features are
     floor-quantized to 2^-40 for the array-free value-hash compare."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p)) for mid, p in _AUDIO_PAYLOADS],
         "media_id long, payload binary",
     )
@@ -285,7 +289,8 @@ def audio_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     popcount over the fixture family."""
     from tcdb_spark.sources.multimodal import media_near_dup_pairs
 
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p)) for mid, p in _AUDIO_DUP_CLIPS],
         "media_id long, payload binary",
     )
@@ -413,7 +418,8 @@ def video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides; 3-of-8-frames-replaced partials land at 62.5%.
     Golden-checked against the naive all-pairs reference; fractions
     ride as basis-point integers (no float literal crosses engines)."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(vid, bytearray(p)) for vid, p in _VIDEOS],
         "video_id long, payload binary",
     )
@@ -523,7 +529,8 @@ def video_near_dup_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_mp4.py).  Golden vs the naive all-pairs reference whose
     frames come through the SAME demux path, so any offset bug in the
     box walk diverges the oracle."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(vid, bytearray(p)) for vid, p in _MP4_VIDEOS],
         "video_id long, payload binary",
     )
@@ -578,7 +585,8 @@ def audio_segment_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytically pinned (tests); the FLAC row must segment identically
     to its WAV twin.  Quantized-explode golden like the clip-level
     lane."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p)) for mid, p in _SEG_PAYLOADS],
         "media_id long, payload binary",
     )
@@ -654,7 +662,8 @@ def audio_silence_trim_lane(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers leading/trailing/both-sided silence, an all-silent clip
     (0,0,0 — never NaN), a fully-active clip, and its FLAC twin (must
     trim identically).  Golden quantized-ratio oracle."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p)) for mid, p in _TRIM_PAYLOADS],
         "media_id long, payload binary",
     )
@@ -717,7 +726,8 @@ def image_dct_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     mostly exact zeros, the median threshold degenerates (bits ride
     quantization noise) while cell-mean aHash stays exact — run BOTH
     and union candidates when the corpus mixes content classes."""
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [(mid, bytearray(p)) for mid, p in _DCTP_IMAGES],
         "media_id long, payload binary",
     )

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from tcdb_spark.operators.similarity import _dot_sql
 from tcdb_spark.plans.catalog import load_tables, register
+from tcdb_spark.session import local_frame
 
 # Lucene/ES defaults
 K1 = 1.2
@@ -342,11 +343,13 @@ def mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     retrieval surface — LLM-pipeline extension op."""
     from tcdb_spark.operators.similarity import _cosine, mmr_rerank
 
-    pool = spark.createDataFrame(
+    pool = local_frame(
+        spark,
         [(i, [float(x) for x in v]) for i, v in sorted(_MMR_POOL.items())],
         "vec_id int, emb array<double>",
     )
-    qs = spark.createDataFrame(
+    qs = local_frame(
+        spark,
         [(i, [float(x) for x in v]) for i, v in sorted(_MMR_QUERIES.items())],
         "q_id int, q_emb array<double>",
     )
@@ -413,7 +416,7 @@ def phrase_match(docs: DataFrame, phrases: list[str]) -> DataFrame:
             )
         ).alias("pos", "tok"),
     )
-    phr = spark.createDataFrame([(p,) for p in phrases], ["phrase"]).select(
+    phr = local_frame(spark, [(p,) for p in phrases], "phrase string").select(
         "phrase", F.split("phrase", " ").alias("pt")
     )
     ptoks = phr.select(

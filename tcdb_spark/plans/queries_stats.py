@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from tcdb_spark.plans.catalog import load_tables, register
+from tcdb_spark.session import local_frame
 
 # Shared ECDF scaffolding for the two-sample tests: for every cohort g
 # (event_type) the comparison sample is the LEAVE-ONE-OUT rest of the
@@ -671,7 +672,7 @@ def bt_ratings_from_wins(
     for i in order:
         tot += p[i]
     out = [(i, int(wi.get(i, 0.0)), round(p[i] / tot, 6)) for i in order]
-    return spark.createDataFrame(out, f"{item_col} string, n_wins bigint, rating double")
+    return local_frame(spark, out, f"{item_col} string, n_wins bigint, rating double")
 
 
 @register("bradley_terry_distributed", oracle=_bt_oracle_sql())
@@ -813,7 +814,7 @@ def bt_ratings_distributed(
             # bounded driver pull (<= _BT_LOCAL_MAX (i, p) rows) and
             # re-injection as a LocalRelation — no file I/O, no scan
             # leaf, constant plan depth; doubles round-trip exactly
-            p = spark.createDataFrame(new_p.collect(), p_schema)
+            p = local_frame(spark, new_p.collect(), p_schema)
             continue
         # alternate two round dirs; the FINAL round keeps its files (the
         # returned DataFrame scans them lazily — retention contract in

@@ -9,9 +9,11 @@ from __future__ import annotations
 
 import contextlib
 import os
+from collections.abc import Iterable, Sequence
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -79,6 +81,36 @@ def persisted(df: DataFrame):
     finally:
         if owned:
             df.unpersist()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side table as a JVM ``LocalRelation``: ``rows``
+    (tuples or ``Row``s, positional) and a DDL string or ``StructType``
+    go to Spark as one Arrow table, so no Python RDD is built and no
+    Python worker scans it, and the optimizer can size, fold and prune
+    it. A list passed straight to ``createDataFrame`` is instead a
+    Python-RDD scan of ``defaultParallelism`` tasks on every evaluation
+    (DEVNOTES #59). Naive datetimes land as session-time-zone wall
+    clock; a value Arrow cannot convert to its column's type raises, as
+    does a NULL in a non-nullable column."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema, timestamp_utc=False)
+    rows = [tuple(r) for r in rows]
+    width = len(arrow)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"every row needs {width} values for schema {schema.simpleString()}")
+    cols = list(zip(*rows)) if rows else [()] * width
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, arrow)]
+    for a, f in zip(arrays, arrow):
+        if not f.nullable and a.null_count:
+            raise ValueError(f"column {f.name} is not nullable but holds NULL")
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def sf_dir(default: str = "/root/testdata/sf0.1") -> str:

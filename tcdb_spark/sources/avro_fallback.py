@@ -288,7 +288,7 @@ def parse_avro_bytes(data: bytes) -> tuple[T.StructType, list[tuple]]:
         raise ValueError("not an Avro object container file")
     try:
         return _parse_avro_body(data)
-    except (KeyError, IndexError, OverflowError, UnicodeDecodeError,
+    except (KeyError, IndexError, OverflowError, TypeError, UnicodeDecodeError,
             zlib.error, json.JSONDecodeError, struct.error) as ex:
         # corrupt varints/metadata/blocks must surface as the documented
         # ValueError quarantine contract, never as the implementation's
@@ -308,11 +308,19 @@ def _parse_avro_body(data: bytes) -> tuple[T.StructType, list[tuple]]:
         if n < 0:  # spec: negative count = abs count + byte size follows
             n = -n
             _, pos = zigzag_decode(data, pos)
+        # a corrupt count or a negative length would otherwise loop for
+        # as long as the count says, rereading the same bytes
+        if n > len(data) - pos:
+            raise ValueError("Avro metadata count runs past the file")
         for _ in range(n):
             kl, pos = zigzag_decode(data, pos)
+            if kl < 0:
+                raise ValueError("negative Avro metadata key length")
             k = data[pos : pos + kl].decode()
             pos += kl
             vl, pos = zigzag_decode(data, pos)
+            if vl < 0:
+                raise ValueError("negative Avro metadata value length")
             meta[k] = data[pos : pos + vl]
             pos += vl
     sync = data[pos : pos + 16]
@@ -327,6 +335,8 @@ def _parse_avro_body(data: bytes) -> tuple[T.StructType, list[tuple]]:
     while pos < len(data):
         count, pos = zigzag_decode(data, pos)
         size, pos = zigzag_decode(data, pos)
+        if size < 0:
+            raise ValueError("negative Avro block size")
         block = data[pos : pos + size]
         pos += size
         if data[pos : pos + 16] != sync:
@@ -336,6 +346,9 @@ def _parse_avro_body(data: bytes) -> tuple[T.StructType, list[tuple]]:
             block = zlib.decompress(block, wbits=-15)
         elif codec != "null":
             raise NotImplementedError(f"avro fallback codec {codec!r}")
+        # every record holds at least its union-branch byte per field
+        if not 0 <= count <= len(block):
+            raise ValueError(f"Avro block count {count} exceeds its {len(block)} bytes")
         bpos = 0
         for _ in range(count):
             vals = []

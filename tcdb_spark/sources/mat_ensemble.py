@@ -25,6 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from tcdb_spark.schemas import SYNTRACK_SCHEMA
+from tcdb_spark.session import local_frame
 from tcdb_spark.sources import mat5
 
 
@@ -138,8 +139,8 @@ def read_mat_ensemble(
     if model is None or init is None:
         model, init = _parse_filename(path)
     raw = mat5.load_mat(path)
-    return spark.createDataFrame(
-        structs_to_rows(mat_to_structs(raw, model, init)), SYNTRACK_SCHEMA
+    return local_frame(
+        spark, structs_to_rows(mat_to_structs(raw, model, init)), SYNTRACK_SCHEMA
     )
 
 
@@ -207,8 +208,8 @@ def fake_ensemble_df(
     (exercises the empty-track filter), member 0 pre-assigned
     annual_id=1."""
     init = init or dt.datetime(2022, 9, 1, 0, 0, 0)
-    return spark.createDataFrame(
-        structs_to_rows(_fake_structs(model, n_ens, n_steps, init)), SYNTRACK_SCHEMA
+    return local_frame(
+        spark, structs_to_rows(_fake_structs(model, n_ens, n_steps, init)), SYNTRACK_SCHEMA
     )
 
 

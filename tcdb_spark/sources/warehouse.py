@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tcdb_spark.session import local_frame
+
 # Spark bucketed file names carry the bucket id as the trailing _NNNNN
 # group before the codec extensions: part-00000-<uuid>_00003.c000.snappy.parquet
 _BUCKET_ID_RE = re.compile(r"_(\d+)(?:\.\w+)*$")
@@ -290,7 +292,7 @@ class Warehouse:
         if v is None:
             if schema is None:
                 raise FileNotFoundError(f"table {table} missing and no schema given")
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if current is None or v > current or v < 1:
             raise FileNotFoundError(
                 f"table {table} has no version {v} (current: {current})"
@@ -499,7 +501,7 @@ class Warehouse:
                 )
                 current_touched = self.spark.table(stage_name)
             else:
-                current_touched = self.spark.createDataFrame([], schema)
+                current_touched = local_frame(self.spark, [], schema)
 
             upsert = _merge(current_touched, incoming, keys, **merge_kwargs)
             # parquet resolves columns by name, but keep the table order so

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tcdb_spark.session import local_frame
 from tcdb_spark.sources.atcf import parse_bdeck_lines
 from tcdb_spark.sources.warehouse import Warehouse
 
@@ -286,7 +287,7 @@ def stream_span_dedup(
             idx = spark.read.schema(SPAN_INDEX_SCHEMA).parquet(index_path)
             idx.head(1)  # force path resolution now, not mid-join
         except Exception:  # first batch: index does not exist yet
-            idx = spark.createDataFrame([], SPAN_INDEX_SCHEMA)
+            idx = local_frame(spark, [], SPAN_INDEX_SCHEMA)
         spans, _, fresh = incremental_duplicated_spans(idx, toks, w=w)
         spans.withColumn("epoch", F.lit(epoch_id)).write.mode("append").parquet(
             spans_path
@@ -815,7 +816,7 @@ def stream_bloom_screen(
         if warehouse.exists(state_table):
             state = warehouse.read(state_table)
         else:
-            state = spark.createDataFrame([], "word_idx int, word long")
+            state = local_frame(spark, [], "word_idx int, word long")
         if warehouse.exists(verdict_table):
             prior = warehouse.read(verdict_table)
             already = (

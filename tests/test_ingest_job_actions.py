@@ -16,8 +16,13 @@ from tcdb_spark.jobs.adeck import run_adeck_job
 from tcdb_spark.jobs.bdeck import run_bdeck_job
 from tcdb_spark.jobs.syntracks import run_syntrack_job
 from tcdb_spark.plans.queries_atcf import BDECK_LINES
+from tcdb_spark.session import local_frame
 from tcdb_spark.sources.atcf import parse_adeck_lines, read_bdeck
-from tcdb_spark.sources.mat_ensemble import fake_ensemble_df
+from tcdb_spark.sources.mat_ensemble import (
+    fake_ensemble_df,
+    read_mat_ensemble_distributed,
+    write_fake_mat,
+)
 from tcdb_spark.sources.warehouse import ConcurrentWriteError, Warehouse
 
 NOW = "2022-09-26 12:00:00"
@@ -55,7 +60,7 @@ def _ensemble(spark):
     return ensemble, invests
 
 
-def _counting(spark, df):
+def _counting(spark, df, col="BASIN"):
     """``df`` behind a filter that counts every row it passes."""
     seen = spark.sparkContext.accumulator(0)
 
@@ -63,7 +68,7 @@ def _counting(spark, df):
         seen.add(1)
         return True
 
-    return df.where(F.udf(tick, "boolean").asNondeterministic()(F.col("BASIN"))), seen
+    return df.where(F.udf(tick, "boolean").asNondeterministic()(F.col(col))), seen
 
 
 def test_bdeck_job_scans_the_deck_text_once(spark, tmp_path, deck_dir):
@@ -232,5 +237,48 @@ def test_ingest_jobs_release_what_they_persist(spark, tmp_path, deck_dir):
         with pytest.raises(ConcurrentWriteError):
             run_bdeck_job(spark, read_bdeck(spark, deck_dir), wh, "B__2", now=_now())
         assert _cache_state(spark) == start
+    finally:
+        os.remove(lock)
+
+
+def test_syntrack_job_decodes_the_ensemble_once(spark, tmp_path):
+    """The members, the ensemble mean and the invests (built from the
+    ensemble, as the cron composition does) all read one decode of the
+    ``.mat`` files, and the job releases it, on error too."""
+    land = tmp_path / "m"
+    land.mkdir()
+    for hour in (0, 12):
+        init = INIT + dt.timedelta(hours=hour)
+        write_fake_mat(str(land / f"ECMWF_{init:%Y%m%d%H}.mat"), n_ens=4, n_steps=3, init=init)
+    pattern = str(land / "*.mat")
+    n_rows = read_mat_ensemble_distributed(spark, pattern).count()
+    inv = local_frame(
+        spark,
+        [(1, "INVEST-95L", 10.2, -40.2, INIT)],
+        "annual_id int, name string, lat double, lon double, valid timestamp",
+    )
+    spark.catalog.clearCache()
+    # ids, not a count: the context cleaner may drop an earlier test's
+    # unreachable RDD at any time, but no RDD of this job may stay
+    start = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+
+    def run(run_id):
+        ensemble, seen = _counting(spark, read_mat_ensemble_distributed(spark, pattern), "model")
+        invests = ensemble.select("model", "init").distinct().crossJoin(F.broadcast(inv))
+        try:
+            return run_syntrack_job(spark, ensemble, invests, wh, run_id)
+        finally:
+            assert seen.value == n_rows
+            assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= start
+            assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    assert run("S__1")["tracks"] > 0
+    lock = os.path.join(wh.root, "steps", "_LOCK")
+    with open(lock, "w") as f:
+        f.write("pid=0 ts=0")
+    try:
+        with pytest.raises(ConcurrentWriteError):
+            run("S__2")
     finally:
         os.remove(lock)

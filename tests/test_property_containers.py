@@ -165,6 +165,18 @@ def test_avro_mutated_only_valueerror(data):
             pass
 
 
+def test_avro_negative_metadata_length_raises_promptly():
+    """One byte (a metadata value length turned negative) once sent the
+    metadata loop rereading the same bytes for as long as its count said:
+    the mutation fuzz above drew it at random and stalled the suite."""
+    from tcdb_spark.sources.avro_fallback import parse_avro_bytes
+
+    buf = bytearray(_valid_avro())
+    buf[17] = 33
+    with pytest.raises(ValueError, match="negative Avro metadata"):
+        parse_avro_bytes(bytes(buf))
+
+
 @given(st.binary(max_size=600))
 @settings(max_examples=300, deadline=None)
 def test_mat5_random_bytes_only_valueerror(data):

@@ -6,7 +6,9 @@ leave a broken script behind unnoticed.  This parses each script with
 ``ast`` (nothing is executed, no Spark session starts) and resolves
 every ``from tcdb_spark... import name`` / ``from bench import name`` /
 ``import tcdb_spark...`` it contains, at module level or inside a
-function."""
+function.  It also checks that each script puts its own checkout on
+``sys.path``, never a fixed absolute path: run from a second checkout,
+a script must import and check that checkout's engine."""
 
 from __future__ import annotations
 
@@ -66,4 +68,39 @@ def test_tool_engine_imports_resolve(path):
     ]
     assert not missing, "tool imports an engine name that no longer exists:\n" + "\n".join(
         missing
+    )
+
+
+def _absolute_sys_path_literals(path: str) -> list[tuple[int, str]]:
+    """(line, literal) for each absolute-path string inside a
+    ``sys.path.insert``/``append``/``extend`` call in ``path``."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    out = []
+    for node in ast.walk(tree):
+        if not (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("insert", "append", "extend")
+            and ast.unparse(node.func.value) == "sys.path"
+        ):
+            continue
+        out += [
+            (c.lineno, c.value)
+            for arg in node.args
+            for c in ast.walk(arg)
+            if isinstance(c, ast.Constant) and isinstance(c.value, str) and os.path.isabs(c.value)
+        ]
+    return out
+
+
+@pytest.mark.parametrize("path", _SCRIPTS, ids=lambda p: os.path.relpath(p, _REPO))
+def test_tool_puts_its_own_checkout_on_sys_path(path):
+    fixed = [
+        f"{os.path.relpath(path, _REPO)}:{line}: {value!r}"
+        for line, value in _absolute_sys_path_literals(path)
+    ]
+    assert not fixed, (
+        "tool puts a fixed absolute path on sys.path; derive the checkout root from "
+        "__file__ instead:\n" + "\n".join(fixed)
     )

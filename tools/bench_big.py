@@ -19,7 +19,8 @@ import shutil
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 BIG_DIR = "/tmp/tcdb_bench_sf1"
 COPIES = 10
@@ -79,14 +80,14 @@ def main() -> None:
         build()
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=BIG_DIR)
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"], env=env, capture_output=True, text=True
+        [sys.executable, os.path.join(REPO, "bench.py")], env=env, capture_output=True, text=True
     )
     line = out.stdout.strip().splitlines()[-1]
     rec = json.loads(line)
     rec["sf"] = "1.0-equivalent (10x replicated sf0.1)"
     rec["round"] = tag
     print(json.dumps(rec))
-    with open("/root/repo/BENCH_BIG.md", "a") as fh:
+    with open(os.path.join(REPO, "BENCH_BIG.md"), "a") as fh:
         fh.write(json.dumps(rec) + "\n")
 
 

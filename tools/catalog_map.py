@@ -15,7 +15,7 @@ Oracle kinds:
   iterative algorithms); pytest-gated instead, and the driver records
   a weaker rows-only check.  The judge sees which.
 
-Usage: python tools/catalog_map.py   (writes /root/repo/CATALOG.md)
+Usage: python tools/catalog_map.py   (writes CATALOG.md at the checkout root)
 """
 
 from __future__ import annotations
@@ -24,9 +24,9 @@ import inspect
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-REPO = "/root/repo"
 
 
 def lane_rows() -> list[tuple[str, str, str, str, str]]:

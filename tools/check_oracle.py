@@ -12,11 +12,13 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def normalize(df, colnames):
@@ -161,7 +163,7 @@ def write_artifact(sf_dir, rows, n_pass, n_fail, n_weak):
     ]
     for name, status, n, sec in rows:
         lines.append(f"| {name} | {status} | {n} | {sec:.1f} |")
-    with open("/root/repo/ORACLE_SUPERSET.md", "w") as f:
+    with open(os.path.join(REPO, "ORACLE_SUPERSET.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote ORACLE_SUPERSET.md ({len(rows)} rows)")
 

@@ -8,11 +8,13 @@ Usage: python tools/explain_report.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 INTERESTING = [
     "join_track_5way",
@@ -188,7 +190,7 @@ def main() -> None:
         out.append(plan.strip())
         out.append("```")
         out.append("</details>\n")
-    with open("/root/repo/EXPLAINS.md", "w") as f:
+    with open(os.path.join(REPO, "EXPLAINS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote EXPLAINS.md ({len(INTERESTING)} queries)")
 

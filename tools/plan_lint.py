@@ -29,10 +29,12 @@ Usage: python tools/plan_lint.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Queries whose plan legitimately contains a 1-row broadcast nested-loop
 # cross join (scalar threshold / global statistic broadcast back).
@@ -280,7 +282,7 @@ def main() -> None:
             f"audit covered {len(rows)}/{len(QUERIES)} catalog queries; missing: {missing}"
         )
 
-    with open("/root/repo/PLAN_LINT.md", "w") as f:
+    with open(os.path.join(REPO, "PLAN_LINT.md"), "w") as f:
         f.write(
             "# PLAN_LINT — executed-plan audit of every catalog query\n\n"
             f"Generated by `python tools/plan_lint.py {sf}`. Final adaptive\n"

@@ -18,7 +18,8 @@ import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def _stages(ui: str, app: str) -> dict[int, dict]:
@@ -86,7 +87,7 @@ def main() -> None:
         )
         print(rows[-1], flush=True)
 
-    with open("/root/repo/SHUFFLE_PROFILE.md", "w") as f:
+    with open(os.path.join(REPO, "SHUFFLE_PROFILE.md"), "w") as f:
         f.write(
             "# SHUFFLE_PROFILE — measured bytes per headline query\n\n"
             f"`python tools/shuffle_profile.py {sf_dir}` — Spark status-API\n"
